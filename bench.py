@@ -218,8 +218,9 @@ class CalibTracker:
         return round(self.best_bracket(name) / max(self.run_min(), 1e-9), 3)
 
     def suspects(self, names) -> list[str]:
-        lim = self.FACTOR * self.run_min()
-        return sorted(n for n in names if self.best_bracket(n) > lim)
+        """Keys with no quiet run: judged on the same rounded ratio the
+        artifact stamps as ``calib_adjacent``, so no key is both."""
+        return sorted(n for n in names if self.adjacent_ratio(n) > self.FACTOR)
 
 
 def _flag_value(args: list[str], flag: str) -> str | None:

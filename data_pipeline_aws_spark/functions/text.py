@@ -16,7 +16,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from data_pipeline_aws_spark.registry import query
-from data_pipeline_aws_spark.tables import table
+from data_pipeline_aws_spark.tables import read_parquet, table
 
 
 def tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2607,7 +2607,7 @@ def _retr_rails(spark: SparkSession, sf_dir: str) -> dict:
             shutil.rmtree(stage, ignore_errors=True)
             raise
         publish(stage, root)
-    return {n: spark.read.parquet(os.path.join(root, n)) for n in names}
+    return {n: read_parquet(spark, os.path.join(root, n)) for n in names}
 
 
 @query("q_retrieval_eval", oracle=_RETR_EVAL_ORACLE)

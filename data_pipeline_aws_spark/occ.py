@@ -56,6 +56,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from data_pipeline_aws_spark.registry import query
+from data_pipeline_aws_spark.tables import read_parquet, table
 
 OCC_BUCKETS = 64
 _PAD = 8  # zero-padded version width in commit file names
@@ -103,14 +104,14 @@ def occ_live(
     if upto is None:
         upto = occ_snapshot(path)
     state = (
-        spark.read.parquet(os.path.join(path, "base"))
+        read_parquet(spark, os.path.join(path, "base"))
         .select("o_orderkey", "cents")
         .withColumn("_v", F.lit(0))
     )
     for v in range(1, upto + 1):
         info = occ_commit_info(path, v)
         state = state.unionByName(
-            spark.read.parquet(os.path.join(path, info["data"]))
+            read_parquet(spark, os.path.join(path, info["data"]))
             .select("o_orderkey", "cents")
             .withColumn("_v", F.lit(v))
         )
@@ -288,7 +289,6 @@ def occ_race_fixture(spark: SparkSession, sf_dir: str) -> str:
     (caches.publish), so a crashed half-run can never satisfy a later
     read."""
     from data_pipeline_aws_spark.caches import publish, staging_dir, versioned_cache_dir
-    from data_pipeline_aws_spark.tables import table
 
     out = versioned_cache_dir("occ_race", sf_dir, __file__)
     if os.path.exists(os.path.join(out, "_SUCCESS")):

@@ -1162,11 +1162,13 @@ def q_item_item_recs(spark: SparkSession, sf_dir: str) -> DataFrame:
       both SMJs and their sorts disappear (plans/r14 dumps);
     - the pair-join width is pinned from the lineitem FOOTER row count
       (partitions ≥ rows/250k, clamped [cores, 4096]) so no SHJ build
-      side exceeds ~25 MB deserialized at any SF — per-task state bounded
-      by arithmetic, not by AQE's byte-advisory coalescing (which chose
-      34×~500 MB builds at sf10, the 16 g GC cliff). The explicit width
-      forfeits AQE skew-split on that exchange; the basket cap is the
-      skew bound there (≤cap lines per order key).
+      side exceeds ~25 MB deserialized up to sf≈170 (4096 × 250k ≈ 1.02B
+      lineitem rows); past that the clamp holds the width at 4096 and the
+      builds grow with SF. Per-task state is bounded by arithmetic, not by
+      AQE's byte-advisory coalescing (which chose 34×~500 MB builds at
+      sf10, the 16 g GC cliff). The explicit width forfeits AQE
+      skew-split on that exchange; the basket cap is the skew bound there
+      (≤cap lines per order key).
     - no localCheckpoint: the distinct's exchange is identical across its
       consumers and ReuseExchange dedupes it (verified in the executed
       plan), so the checkpoint bought nothing but pinned blocks.

@@ -42,7 +42,7 @@ from data_pipeline_aws_spark.functions.curation import (
     stratum_bucket_sql,
 )
 from data_pipeline_aws_spark.registry import query
-from data_pipeline_aws_spark.tables import table
+from data_pipeline_aws_spark.tables import read_parquet, table
 
 SHINGLE_WIDTH = 3
 JACCARD_THRESHOLD = 0.5
@@ -652,7 +652,7 @@ def mh_refresh_frame(spark: SparkSession, sf_dir: str, epoch: int) -> DataFrame:
     d = table(spark, sf_dir, "documents")
     prev = _mh_index_versions(spark, sf_dir, upto=epoch - 1)[epoch - 1]
     batch_sig = _mh_sig_table(d.where(F.col("doc_id") % 3 == epoch))
-    return mh_index_refresh(batch_sig, spark.read.parquet(prev)).withColumn(
+    return mh_index_refresh(batch_sig, read_parquet(spark, prev)).withColumn(
         "epoch", F.lit(epoch).cast("int")
     )
 
@@ -696,7 +696,7 @@ def _mh_index_versions(
         publish(stage, paths[0])
     for k in range(1, upto + 1):
         if not os.path.exists(os.path.join(paths[k], "_SUCCESS")):
-            prev = spark.read.parquet(paths[k - 1])
+            prev = read_parquet(spark, paths[k - 1])
             batch_sig = _mh_sig_table(d.where(F.col("doc_id") % 3 == k))
             adm = mh_index_refresh(batch_sig, prev).withColumn(
                 "epoch", F.lit(k).cast("int")
@@ -846,7 +846,7 @@ def q_dedup_minhash_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     DuckDB: a FULL hash oracle over the sketch content, not just over
     admission decisions."""
     v2 = _mh_index_versions(spark, sf_dir)[2]
-    idx = spark.read.parquet(v2)
+    idx = read_parquet(spark, v2)
     return idx.select(
         "doc_id",
         "epoch",

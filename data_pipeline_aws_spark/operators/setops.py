@@ -13,7 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from data_pipeline_aws_spark.registry import query
-from data_pipeline_aws_spark.tables import table
+from data_pipeline_aws_spark.tables import read_parquet, table
 
 
 @query(
@@ -875,7 +875,7 @@ def q_compaction_execute(spark: SparkSession, sf_dir: str) -> DataFrame:
             base.write.partitionBy("file_id").mode("overwrite").parquet(
                 os.path.join(stage, "base")
             )
-            base_b = spark.read.parquet(os.path.join(stage, "base"))
+            base_b = read_parquet(spark, os.path.join(stage, "base"))
             feed = merge_dv_feed(base_b)
             merge_dv_marks(base_b, feed).write.mode("overwrite").parquet(
                 os.path.join(stage, "dv")
@@ -883,7 +883,7 @@ def q_compaction_execute(spark: SparkSession, sf_dir: str) -> DataFrame:
             feed.where(F.col("op").isin("update", "insert")).select(
                 "o_orderkey", F.col("new_cents").alias("cents")
             ).write.mode("overwrite").parquet(os.path.join(stage, "delta"))
-            dv_b = spark.read.parquet(os.path.join(stage, "dv"))
+            dv_b = read_parquet(spark, os.path.join(stage, "dv"))
             per_file = (
                 base_b.join(
                     F.broadcast(dv_b.withColumn("marked", F.lit(1))),
@@ -935,12 +935,12 @@ def q_compaction_execute(spark: SparkSession, sf_dir: str) -> DataFrame:
             raise
         publish(stage, out)
 
-    base = spark.read.parquet(os.path.join(out, "base"))
-    dv = spark.read.parquet(os.path.join(out, "dv"))
-    delta = spark.read.parquet(os.path.join(out, "delta"))
-    sel = spark.read.parquet(os.path.join(out, "selected"))
-    rewritten = spark.read.parquet(os.path.join(out, "rewritten"))
-    dv_after = spark.read.parquet(os.path.join(out, "dv_after"))
+    base = read_parquet(spark, os.path.join(out, "base"))
+    dv = read_parquet(spark, os.path.join(out, "dv"))
+    delta = read_parquet(spark, os.path.join(out, "delta"))
+    sel = read_parquet(spark, os.path.join(out, "selected"))
+    rewritten = read_parquet(spark, os.path.join(out, "rewritten"))
+    dv_after = read_parquet(spark, os.path.join(out, "dv_after"))
 
     untouched = base.join(F.broadcast(sel), "file_id", "left_anti")
     after_base = untouched.select(

@@ -21,7 +21,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from data_pipeline_aws_spark.registry import query
-from data_pipeline_aws_spark.tables import table
+from data_pipeline_aws_spark.tables import read_parquet, table
 
 TOP_K = 5
 N_QUERIES = 10  # vec_id < 10 are the query batch
@@ -1685,7 +1685,7 @@ def ivfpq_index(spark: SparkSession, sf_dir: str):
         publish(stage, out)
     books = np.load(os.path.join(out, "books.npy"))
     cents = np.load(os.path.join(out, "cents.npy"))
-    return spark.read.parquet(os.path.join(out, "index")), books, cents
+    return read_parquet(spark, os.path.join(out, "index")), books, cents
 
 
 def ivfpq_topk(spark: SparkSession, sf_dir: str):
@@ -2012,7 +2012,7 @@ def ivfpq_inc_index(spark: SparkSession, sf_dir: str):
         publish(stage, v2)
     books = np.load(os.path.join(v2, "books.npy"))
     cents = np.load(os.path.join(v2, "cents.npy"))
-    return spark.read.parquet(os.path.join(v2, "index")), books, cents
+    return read_parquet(spark, os.path.join(v2, "index")), books, cents
 
 
 @query(

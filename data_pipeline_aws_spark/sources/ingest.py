@@ -20,7 +20,7 @@ from pyspark.sql import types as T
 
 from data_pipeline_aws_spark.caches import sf_tag
 from data_pipeline_aws_spark.registry import query
-from data_pipeline_aws_spark.tables import table
+from data_pipeline_aws_spark.tables import read_parquet, table
 
 EVENTS_JSON_SCHEMA = T.StructType(
     [
@@ -198,7 +198,7 @@ def partitioned_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_partitioned(
             li.select("l_orderkey", "l_extendedprice", "ship_year"), out, "ship_year"
         )
-    return spark.read.parquet(out)
+    return read_parquet(spark, out)
 
 
 @query(
@@ -498,7 +498,7 @@ def compact_parquet(spark: SparkSession, src: str, dst: str) -> int:
     counts (and S3 LIST/GET amplification) proportional to data volume
     instead of arrival granularity."""
     n_out = max(1, -(-_dir_bytes(src) // COMPACT_TARGET_BYTES))
-    spark.read.parquet(src).repartition(n_out).write.mode("overwrite").parquet(dst)
+    read_parquet(spark, src).repartition(n_out).write.mode("overwrite").parquet(dst)
     return n_out
 
 
@@ -531,7 +531,7 @@ def q_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     compacted = _cache_dir("compacted_events", sf_dir)
     if not os.path.exists(os.path.join(compacted, "_SUCCESS")):
         compact_parquet(spark, frag, compacted)
-    back = spark.read.parquet(compacted)
+    back = read_parquet(spark, compacted)
     return back.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_events"),
         F.round(F.sum("value"), 4).alias("total_value"),
@@ -847,7 +847,7 @@ def q_gdpr_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_partitioned(src, out, "ship_year")  # the pre-existing table
         gdpr_delete_partitions(src, out, F.col("l_orderkey") % 1000 == 0, "ship_year")
         open(os.path.join(out, "_DONE"), "w").close()
-    back = spark.read.parquet(out)
+    back = read_parquet(spark, out)
     return back.groupBy(F.col("ship_year").cast("int").alias("ship_year")).agg(
         F.count(F.lit(1)).alias("n_lines"),
         F.round(F.sum("l_extendedprice"), 2).alias("total_price"),
@@ -917,7 +917,7 @@ def q_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
             .write.mode("overwrite")
             .parquet(out)
         )
-    back = spark.read.parquet(out)
+    back = read_parquet(spark, out)
     # SUM(zval) is an exact integer checksum of every curve key — the oracle
     # recomputes it in SQL, so a single wrong bit anywhere fails the hash.
     return back.groupBy(
@@ -1681,7 +1681,7 @@ def q_range_sort_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
             .write.mode("overwrite")
             .parquet(out)
         )
-    back = spark.read.parquet(out).select(
+    back = read_parquet(spark, out).select(
         F.input_file_name().alias("f"), "o_totalprice"
     )
     stats = back.groupBy("f").agg(

@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from data_pipeline_aws_spark.registry import query
-from data_pipeline_aws_spark.tables import table
+from data_pipeline_aws_spark.tables import read_parquet, table
 
 _COUNTER = itertools.count()
 
@@ -52,8 +52,7 @@ def _stream_partitions(spark: SparkSession):
 def _stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-source stream over the events table (bounded in tests; the same
     code tails an arrival directory in production)."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    static_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    static_schema = read_parquet(spark, f"{sf_dir}/events.parquet").schema
     stream = (
         spark.readStream.schema(static_schema)
         .option("pathGlobFilter", "events.parquet")
@@ -218,6 +217,9 @@ def q_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _run_to_completion(joined, "append")
 
 
+_SINK_COLS = ("event_id", "event_type", "value")  # what q_stream_sink lands
+
+
 @query(
     "q_stream_sink",
     oracle="""
@@ -260,9 +262,7 @@ def q_stream_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         # content is deterministic either way).
         stage = staging_dir(out)
         try:
-            stream = _stream_events(spark, sf_dir).select(
-                "event_id", "event_type", "value"
-            )
+            stream = _stream_events(spark, sf_dir).select(*_SINK_COLS)
 
             def land(batch_df: DataFrame, epoch_id: int) -> None:
                 batch_df.write.mode("overwrite").parquet(
@@ -286,7 +286,15 @@ def q_stream_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
             shutil.rmtree(stage, ignore_errors=True)
             raise
         publish(stage, out)
-    back = spark.read.parquet(out)
+    # Every build lands under fresh file names, so a schema memo would
+    # always miss; the writer knows the layout's schema instead: the
+    # stream's columns plus the `epoch=<id>` partition column.
+    landed = (
+        read_parquet(spark, f"{sf_dir}/events.parquet")
+        .select(*_SINK_COLS)
+        .schema.add("epoch", "integer")
+    )
+    back = spark.read.schema(landed).parquet(out)
     return back.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_events"),
         F.round(F.sum("value"), 4).alias("total_value"),
@@ -354,7 +362,7 @@ def stream_merge_layout(spark: SparkSession, sf_dir: str) -> str:
         try:
             base = merge_dv_base(spark, sf_dir)
             base.write.mode("overwrite").parquet(os.path.join(stage, "base"))
-            base_back = spark.read.parquet(os.path.join(stage, "base"))
+            base_back = read_parquet(spark, os.path.join(stage, "base"))
             feed = merge_dv_feed(base_back)
             # the feed arrives as STREAM_MERGE_SLICES files — deterministic
             # key slices, one file each, so the file source triggers one
@@ -405,7 +413,7 @@ def merge_land_fn(stage: str):
         from data_pipeline_aws_spark.operators.setops import merge_dv_marks
 
         spark = batch_df.sparkSession
-        base = spark.read.parquet(os.path.join(stage, "base"))
+        base = read_parquet(spark, os.path.join(stage, "base"))
         # merge_dv_marks IS the one DV definition; the broadcast hint on
         # the churn-sized batch side rides through its filter/select
         merge_dv_marks(base, F.broadcast(batch_df)).write.mode("overwrite").parquet(
@@ -447,9 +455,9 @@ def q_stream_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     cache, bench --cold measures the write-inclusive drain)."""
     out = stream_merge_layout(spark, sf_dir)
 
-    base = spark.read.parquet(os.path.join(out, "base"))
-    dv = spark.read.parquet(os.path.join(out, "dv"))
-    delta = spark.read.parquet(os.path.join(out, "delta"))
+    base = read_parquet(spark, os.path.join(out, "base"))
+    dv = read_parquet(spark, os.path.join(out, "dv"))
+    delta = read_parquet(spark, os.path.join(out, "delta"))
     live = base.join(
         F.broadcast(dv.select("file_id", "pos")), ["file_id", "pos"], "left_anti"
     )
@@ -583,9 +591,9 @@ def q_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition-discovered `epoch=` dir column; money stays integer cents."""
     out = stream_merge_layout(spark, sf_dir)
     s = STREAM_MERGE_SLICES
-    base = spark.read.parquet(os.path.join(out, "base"))
-    dv = spark.read.parquet(os.path.join(out, "dv"))
-    delta = spark.read.parquet(os.path.join(out, "delta"))
+    base = read_parquet(spark, os.path.join(out, "base"))
+    dv = read_parquet(spark, os.path.join(out, "dv"))
+    delta = read_parquet(spark, os.path.join(out, "delta"))
 
     # churn-sized probe: resolve DV addresses to their keys + cents (base
     # never shuffles — the DV side broadcasts); the SAME resolved relation
@@ -719,9 +727,9 @@ def q_snapshot_expire(spark: SparkSession, sf_dir: str) -> DataFrame:
     if not os.path.exists(os.path.join(out, "_SUCCESS")):
         stage = staging_dir(out)
         try:
-            base = spark.read.parquet(os.path.join(src, "base"))
-            dv = spark.read.parquet(os.path.join(src, "dv"))
-            delta = spark.read.parquet(os.path.join(src, "delta"))
+            base = read_parquet(spark, os.path.join(src, "base"))
+            dv = read_parquet(spark, os.path.join(src, "dv"))
+            delta = read_parquet(spark, os.path.join(src, "delta"))
             # DV addresses resolve to keys via one broadcast base probe so
             # the slice map covers delete-only epochs (_epoch_slice_map)
             dv_keys = base.join(
@@ -773,9 +781,9 @@ def q_snapshot_expire(spark: SparkSession, sf_dir: str) -> DataFrame:
             raise
         publish(stage, out)
 
-    base2 = spark.read.parquet(os.path.join(out, "base"))
-    dv2 = spark.read.parquet(os.path.join(out, "dv"))
-    delta2 = spark.read.parquet(os.path.join(out, "delta"))
+    base2 = read_parquet(spark, os.path.join(out, "base"))
+    dv2 = read_parquet(spark, os.path.join(out, "dv"))
+    delta2 = read_parquet(spark, os.path.join(out, "delta"))
     live = base2.join(
         F.broadcast(dv2.select("file_id", "pos")), ["file_id", "pos"], "left_anti"
     ).select("cents").unionByName(delta2.select("cents"))
@@ -946,9 +954,9 @@ def _merged_count(spark: SparkSession, layout: str) -> int:
     """Row count of the canonical MERGE read path (base ANTI broadcast(DV)
     ∪ delta) over a layout — the equality probe vacuum uses to prove it
     deleted only garbage."""
-    base = spark.read.parquet(os.path.join(layout, "base"))
-    dv = spark.read.parquet(os.path.join(layout, "dv"))
-    delta = spark.read.parquet(os.path.join(layout, "delta"))
+    base = read_parquet(spark, os.path.join(layout, "base"))
+    dv = read_parquet(spark, os.path.join(layout, "dv"))
+    delta = read_parquet(spark, os.path.join(layout, "delta"))
     return (
         base.join(
             F.broadcast(dv.select("file_id", "pos")),
@@ -1100,8 +1108,9 @@ def q_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     purchase watermark still advances only from observed purchases and
     the click watermark only from clicks. Equivalence measured, not
     argued: drained results asserted row-identical two-source vs shared
-    (tools/ssj_ab.py, symdiff 0 at sf0.1) and the oracle passes on the
-    diff; progress telemetry confirms sources 2 -> 1."""
+    (symdiff 0 at sf0.1; VERDICT.md, r14 item 2) and the oracle passes on
+    the diff; progress telemetry confirms sources 2 -> 1 (plans/r14
+    q_stream_stream_join before/after dumps)."""
     ev = _stream_events(spark, sf_dir)
     purchases = (
         ev.where(F.col("event_type") == "purchase")
@@ -1176,10 +1185,10 @@ def q_stream_stream_left(spark: SparkSession, sf_dir: str) -> DataFrame:
     two stream sources plus the no-data flush batches — per-trigger
     state-store commits (4 stores x partitions x sides), not data
     volume, set the floor (the 4-point curve is ~flat, exponent 0.09).
-    Round-12 bounded experiment (STREAM_TUNE.json,
-    tools/stream_left_tune.py): state-store provider (RocksDB) and
-    per-query state-partition overrides measured head-to-head per the
-    round-11 verdict order #4 adoption rule (>=1.5x or keep).
+    Round-12 bounded experiment (results committed in STREAM_TUNE.json):
+    state-store provider (RocksDB) and per-query state-partition overrides
+    measured head-to-head per the round-11 verdict order #4 adoption rule
+    (>=1.5x or keep); neither cleared it, so the defaults stay.
 
     The drained result lands as a versioned-cache layout (round-11
     advisory): the memory sink is already one driver-side copy, so the
@@ -1194,7 +1203,7 @@ def q_stream_stream_left(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     out = versioned_cache_dir("stream_left", sf_dir, __file__)
     if os.path.exists(os.path.join(out, "_SUCCESS")):
-        return spark.read.parquet(out)
+        return read_parquet(spark, out)
     arrival = tempfile.mkdtemp(prefix="dpas_stream_left_")
     try:
         ev = _ensure_event_time(
@@ -1284,7 +1293,7 @@ def q_stream_stream_left(spark: SparkSession, sf_dir: str) -> DataFrame:
             shutil.rmtree(stage, ignore_errors=True)
             raise
         publish(stage, out)
-        return spark.read.parquet(out)
+        return read_parquet(spark, out)
     finally:
         shutil.rmtree(arrival, ignore_errors=True)
 
@@ -1387,8 +1396,7 @@ def q_stream_session(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    raw = spark.read.parquet(f"{sf_dir}/events.parquet")
+    raw = read_parquet(spark, f"{sf_dir}/events.parquet")
     tmp = tempfile.mkdtemp(prefix="dpas_sess_stream_")
     shutil.copy(f"{sf_dir}/events.parquet", os.path.join(tmp, "batch0_events.parquet"))
     # bounded collect: single scalar (max raw ts) to place the sentinel
@@ -1891,9 +1899,9 @@ def trigger_merged(
     name = os.path.basename(arrival.rstrip(os.sep))
     if name in processed:
         return None, cur, processed
-    delta = _trigger_partial(spark.read.parquet(arrival))
+    delta = _trigger_partial(read_parquet(spark, arrival))
     if cur:
-        prev = spark.read.parquet(os.path.join(state, f"rollup_e{cur}"))
+        prev = read_parquet(spark, os.path.join(state, f"rollup_e{cur}"))
         merged = _trigger_reagg(prev.unionByName(delta))
     else:
         merged = _trigger_reagg(delta)
@@ -1984,7 +1992,7 @@ def q_trigger_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     epochs = _trigger_epochs(state)
     cur = epochs[-1]
     n_files = len(_trigger_manifest(state, cur))
-    rollup = spark.read.parquet(os.path.join(state, f"rollup_e{cur}"))
+    rollup = read_parquet(spark, os.path.join(state, f"rollup_e{cur}"))
     return rollup.select(
         "o_orderpriority",
         "n_orders",

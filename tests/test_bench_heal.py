@@ -72,3 +72,14 @@ def test_never_bracketed_key_is_suspect():
     # a key that somehow never got bracketed reads as untrusted, not clean
     assert t.suspects(["ghost"]) == ["ghost"]
     assert t.adjacent_ratio("ghost") == float("inf")
+
+
+def test_boundary_ratio_is_judged_on_the_stamped_value():
+    t = CalibTracker(0.01)
+    t.note_run("edge")
+    t.sample(0.015004)  # ratio 1.5004: stamps as 1.5, the trusted limit
+    t.note_run("over")
+    t.sample(0.015006)  # charged max(0.015004, 0.015006): stamps as 1.501
+    assert t.adjacent_ratio("edge") == 1.5
+    assert t.adjacent_ratio("over") == 1.501
+    assert t.suspects(["edge", "over"]) == ["over"]
