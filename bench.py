@@ -61,11 +61,12 @@ HEADLINE = [
 # Keep safely under the driver's 2000-char stdout tail capture.
 MAX_LINE = 1800
 
-# Keys whose fixture is a cached on-disk sink (/tmp/dpas_* via _cache_dir):
-# on a WARM pass the write is skipped (_SUCCESS sentinel), so their recorded
-# time measures read-back of the written layout, not the write itself. The
-# artifact carries this list; --cold clears the caches so pass 0 measures
-# the write-inclusive cost (and those keys are then not re-sampled warm).
+# Keys whose fixture is a cached on-disk sink (/tmp/dpas_* built through
+# caches.materialize): on a WARM pass the write is skipped (_SUCCESS
+# sentinel), so their recorded time measures read-back of the written
+# layout, not the write itself. The artifact carries this list; --cold
+# clears the caches so pass 0 measures the write-inclusive cost (and those
+# keys are then not re-sampled warm).
 SINK_CACHE_KEYS = [
     "q_json_ingest", "q_csv_ingest", "q_orc_ingest", "q_partitioned_sink",
     "q_corrupt_ingest", "q_compact", "q_schema_evolution", "q_gdpr_delete",
@@ -131,8 +132,8 @@ def _cpu_calibration() -> float:
 
 def _clear_sink_caches(sf_dir: str) -> None:
     """Remove ONLY this sf_dir's sink caches. The cache dirs are named
-    ``dpas_{kind}_{tag}_{version}`` (caches.versioned_cache_dir /
-    ingest._cache_dir), so scoping the glob to the active tag leaves other
+    ``dpas_{kind}_{tag}_{version}`` (caches.versioned_cache_dir, the one
+    naming scheme), so scoping the glob to the active tag leaves other
     SF dirs' caches, the ship_package zips, and any concurrent test/driver
     session's fixtures untouched — a blanket ``dpas_*`` rmtree raced those
     mid-run. The tag comes from the caches module itself so the two can't

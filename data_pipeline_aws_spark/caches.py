@@ -1,6 +1,6 @@
-"""Versioned tempdir caches for materialized fixtures (persisted indexes,
-landed sink layouts). One canonical implementation of the naming/eviction
-scheme `sources/ingest.py` established for its own fixtures:
+"""Versioned tempdir caches: the one naming scheme, eviction policy and
+commit protocol for every durable artifact the engine materializes
+(landed sink layouts, persisted indexes, ingest fixtures, race layouts).
 
     {tempdir}/dpas_{kind}_{md5(sf_dir)[:10]}_{version}
 
@@ -10,11 +10,13 @@ scheme `sources/ingest.py` established for its own fixtures:
   session.py (the read-path modules that shape cache contents), so an
   artifact written by older code can never satisfy a newer read path;
 - siblings minted by other code versions are evicted on access (each
-  revision would otherwise strand a full copy of the fixture in tempdir).
+  revision would otherwise strand a full copy of the fixture in tempdir),
+  while in-flight `.build<pid>` stagings and `.lock` files are spared.
 
-ingest.py keeps its original private copy (its version token is shared by
-bucketed-table names and JSON caches beyond this dir scheme); dedup.py and
-streaming/jobs.py use this helper."""
+Writers never touch a final directory: `materialize(final, build)` runs
+the build in a staging sibling and `publish`es it (atomic rename under
+``posix``; claim → PUT → manifest → marker under ``objectstore``).
+Readers gate on the ``_SUCCESS`` marker only."""
 
 from __future__ import annotations
 
@@ -24,6 +26,7 @@ import json
 import os
 import shutil
 import tempfile
+import threading
 
 
 def publish_mode() -> str:
@@ -86,8 +89,9 @@ def manifest_hash(root: str) -> str:
 @functools.lru_cache(maxsize=None)
 def _module_version(module_file: str) -> str:
     """md5 over the owning module + tables.py + session.py — computed once
-    per process per module (the hand-rolled copies this replaces re-hashed
-    their whole module file on every call)."""
+    per process per module, and only when a cache path is resolved (never
+    at import: executors import modules from the shipped package zip, where
+    ``open(module_file)`` fails)."""
     pkg = os.path.dirname(os.path.abspath(__file__))
     h = hashlib.md5()
     for path in (module_file, os.path.join(pkg, "tables.py"), os.path.join(pkg, "session.py")):
@@ -143,14 +147,41 @@ def versioned_cache_dir(kind: str, sf_dir: str, module_file: str) -> str:
 
 
 def staging_dir(final: str) -> str:
-    """Fresh per-process staging sibling for an atomic publish into
+    """Fresh per-thread staging sibling for an atomic publish into
     ``final`` — build the whole layout here, then `publish()` it. Never
     write into ``final`` directly: a second session could observe (or
-    self-heal away) the half-built state."""
-    path = f"{final}.build{os.getpid()}"
+    self-heal away) the half-built state. The name carries the thread id
+    as well as the PID, so two threads of one driver racing the same
+    layout never wipe each other's staging."""
+    path = f"{final}.build{os.getpid()}-{threading.get_ident()}"
     shutil.rmtree(path, ignore_errors=True)
     os.makedirs(path)
     return path
+
+
+def materialize(final: str, build) -> str:
+    """Build the cache layout at ``final`` once and return ``final``.
+
+    If ``final/_SUCCESS`` exists the layout is already committed and
+    ``build`` is not called. Otherwise ``build(stage)`` writes the whole
+    layout into a fresh `staging_dir`; ``_SUCCESS`` is added if the build
+    did not write one, and the stage is `publish`ed. A build that raises
+    leaves nothing behind: the stage is removed and the error re-raised.
+    ``publish`` is looked up at call time, so a wrapper installed on this
+    module sees every commit."""
+    if os.path.exists(os.path.join(final, "_SUCCESS")):
+        return final
+    stage = staging_dir(final)
+    try:
+        build(stage)
+        marker = os.path.join(stage, "_SUCCESS")
+        if not os.path.exists(marker):
+            open(marker, "w").close()
+    except BaseException:
+        shutil.rmtree(stage, ignore_errors=True)
+        raise
+    publish(stage, final)
+    return final
 
 
 def link_or_copy(src: str, dst: str) -> None:

@@ -2590,23 +2590,19 @@ def _retr_rails(spark: SparkSession, sf_dir: str) -> dict:
     `bench.py --cold` clears the cache via the shared sf-tag glob, billing
     the write-inclusive build to the first key in cold pass order."""
     import os
-    import shutil
 
-    from data_pipeline_aws_spark.caches import publish, staging_dir, versioned_cache_dir
+    from data_pipeline_aws_spark import caches
 
     names = ("qt", "sc", "dl", "bm", "cs", "rb", "rc", "fused")
-    root = versioned_cache_dir("retr_rails", sf_dir, __file__)
-    if not os.path.exists(os.path.join(root, "_SUCCESS")):
+
+    def build(stage: str) -> None:
         built = _retr_rails_build(spark, sf_dir)
-        stage = staging_dir(root)
-        try:
-            for name in names:
-                built[name].write.mode("overwrite").parquet(os.path.join(stage, name))
-            open(os.path.join(stage, "_SUCCESS"), "w").close()
-        except BaseException:  # never strand a partial staging in tempdir
-            shutil.rmtree(stage, ignore_errors=True)
-            raise
-        publish(stage, root)
+        for name in names:
+            built[name].write.mode("overwrite").parquet(os.path.join(stage, name))
+
+    root = caches.materialize(
+        caches.versioned_cache_dir("retr_rails", sf_dir, __file__), build
+    )
     return {n: read_parquet(spark, os.path.join(root, n)) for n in names}
 
 

@@ -286,15 +286,11 @@ def occ_race_fixture(spark: SparkSession, sf_dir: str) -> str:
     (attempts=1).
 
     The race runs in a staging sibling and is adopted atomically
-    (caches.publish), so a crashed half-run can never satisfy a later
+    (caches.materialize), so a crashed half-run can never satisfy a later
     read."""
-    from data_pipeline_aws_spark.caches import publish, staging_dir, versioned_cache_dir
+    from data_pipeline_aws_spark import caches
 
-    out = versioned_cache_dir("occ_race", sf_dir, __file__)
-    if os.path.exists(os.path.join(out, "_SUCCESS")):
-        return out
-    stage = staging_dir(out)
-    try:
+    def build(stage: str) -> None:
         base = table(spark, sf_dir, "orders").select(
             "o_orderkey",
             F.expr("cast(round(o_totalprice * 100) as bigint)").alias("cents"),
@@ -325,13 +321,10 @@ def occ_race_fixture(spark: SparkSession, sf_dir: str) -> str:
         }
         with open(os.path.join(stage, "_META.json"), "w") as f:
             json.dump(meta, f, sort_keys=True)
-        with open(os.path.join(stage, "_SUCCESS"), "w"):
-            pass
-    except BaseException:
-        shutil.rmtree(stage, ignore_errors=True)
-        raise
-    publish(stage, out)
-    return out
+
+    return caches.materialize(
+        caches.versioned_cache_dir("occ_race", sf_dir, __file__), build
+    )
 
 
 @query(

@@ -664,54 +664,30 @@ def _mh_index_versions(
     versions 0..upto: v0 = history build, v1 = v0 + admitted batch1, v2 =
     v1 + admitted batch2. Returns their paths; each write is skipped when
     its _SUCCESS sentinel exists (the sink-fixture idempotence pattern)."""
-    import os
-
-    from data_pipeline_aws_spark.caches import publish, staging_dir, versioned_cache_dir
+    from data_pipeline_aws_spark import caches
 
     d = table(spark, sf_dir, "documents")
     cols = ["doc_id", "epoch", "chash"] + [f"mh{i}" for i in range(_MH_N)]
-    paths = [
-        versioned_cache_dir(f"mh_index_v{k}", sf_dir, __file__)
-        for k in range(upto + 1)
-    ]
-    # Every version is built in a per-process staging dir and published
-    # atomically — a concurrent same-version session can never interleave
-    # part files into a half-written index (the persisted layout IS the
-    # oracle-compared output, so a corrupted cache would fail parity on
-    # every warm run until the code hash moved).
-    if not os.path.exists(os.path.join(paths[0], "_SUCCESS")):
-        hist = (
-            _mh_sig_table(d.where(F.col("doc_id") % 3 == 0))
-            .withColumn("epoch", F.lit(0).cast("int"))
-            .select(cols)
-        )
-        stage = staging_dir(paths[0])
-        try:
-            hist.write.mode("overwrite").parquet(stage)
-        except BaseException:  # never strand a partial staging in tempdir
-            import shutil
+    # Every version is built in a staging dir and published
+    # atomically (caches.materialize) — a concurrent same-version session
+    # can never interleave part files into a half-written index (the
+    # persisted layout IS the oracle-compared output, so a corrupted cache
+    # would fail parity on every warm run until the code hash moved).
+    paths: list[str] = []
+    for k in range(upto + 1):
 
-            shutil.rmtree(stage, ignore_errors=True)
-            raise
-        publish(stage, paths[0])
-    for k in range(1, upto + 1):
-        if not os.path.exists(os.path.join(paths[k], "_SUCCESS")):
-            prev = read_parquet(spark, paths[k - 1])
-            batch_sig = _mh_sig_table(d.where(F.col("doc_id") % 3 == k))
-            adm = mh_index_refresh(batch_sig, prev).withColumn(
-                "epoch", F.lit(k).cast("int")
-            )
-            stage = staging_dir(paths[k])
-            try:
-                prev.unionByName(adm.select(cols)).write.mode(
-                    "overwrite"
-                ).parquet(stage)
-            except BaseException:
-                import shutil
+        def build(stage: str) -> None:
+            sig = _mh_sig_table(d.where(F.col("doc_id") % 3 == k))
+            if k == 0:
+                index = sig.withColumn("epoch", F.lit(0).cast("int")).select(cols)
+            else:
+                prev = read_parquet(spark, paths[k - 1])
+                adm = mh_index_refresh(sig, prev).withColumn("epoch", F.lit(k).cast("int"))
+                index = prev.unionByName(adm.select(cols))
+            index.write.mode("overwrite").parquet(stage)
 
-                shutil.rmtree(stage, ignore_errors=True)
-                raise
-            publish(stage, paths[k])
+        final = caches.versioned_cache_dir(f"mh_index_v{k}", sf_dir, __file__)
+        paths.append(caches.materialize(final, build))
     return paths
 
 

@@ -863,77 +863,69 @@ def q_compaction_execute(spark: SparkSession, sf_dir: str) -> DataFrame:
     live bytes, never the table, which is the entire point of DV-first
     MERGE + scheduled compaction. Money stays integer cents end to end."""
     import os
-    import shutil
 
-    from data_pipeline_aws_spark.caches import publish, staging_dir
+    from data_pipeline_aws_spark import caches
 
-    out = _compaction_exec_cache_dir(sf_dir)
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
-        stage = staging_dir(out)
-        try:
-            base = merge_dv_base(spark, sf_dir)
-            base.write.partitionBy("file_id").mode("overwrite").parquet(
-                os.path.join(stage, "base")
+    def build(stage: str) -> None:
+        base = merge_dv_base(spark, sf_dir)
+        base.write.partitionBy("file_id").mode("overwrite").parquet(
+            os.path.join(stage, "base")
+        )
+        base_b = read_parquet(spark, os.path.join(stage, "base"))
+        feed = merge_dv_feed(base_b)
+        merge_dv_marks(base_b, feed).write.mode("overwrite").parquet(
+            os.path.join(stage, "dv")
+        )
+        feed.where(F.col("op").isin("update", "insert")).select(
+            "o_orderkey", F.col("new_cents").alias("cents")
+        ).write.mode("overwrite").parquet(os.path.join(stage, "delta"))
+        dv_b = read_parquet(spark, os.path.join(stage, "dv"))
+        per_file = (
+            base_b.join(
+                F.broadcast(dv_b.withColumn("marked", F.lit(1))),
+                ["file_id", "pos"],
+                "left",
             )
-            base_b = read_parquet(spark, os.path.join(stage, "base"))
-            feed = merge_dv_feed(base_b)
-            merge_dv_marks(base_b, feed).write.mode("overwrite").parquet(
-                os.path.join(stage, "dv")
+            .groupBy("file_id")
+            .agg(
+                F.count(F.lit(1)).alias("n_rows"),
+                F.sum(F.coalesce("marked", F.lit(0))).alias("n_dv_marked"),
             )
-            feed.where(F.col("op").isin("update", "insert")).select(
-                "o_orderkey", F.col("new_cents").alias("cents")
-            ).write.mode("overwrite").parquet(os.path.join(stage, "delta"))
-            dv_b = read_parquet(spark, os.path.join(stage, "dv"))
-            per_file = (
-                base_b.join(
-                    F.broadcast(dv_b.withColumn("marked", F.lit(1))),
-                    ["file_id", "pos"],
-                    "left",
-                )
-                .groupBy("file_id")
-                .agg(
-                    F.count(F.lit(1)).alias("n_rows"),
-                    F.sum(F.coalesce("marked", F.lit(0))).alias("n_dv_marked"),
-                )
-            )
-            from pyspark.sql import Window
+        )
+        from pyspark.sql import Window
 
-            w = Window.orderBy(F.desc("dv_fraction"), F.asc("file_id"))
-            # the planned file set: K ints — bounded metadata, the one
-            # driver-side decision a table service makes per cycle
-            selected = [
-                r.file_id
-                for r in per_file.withColumn(
-                    "dv_fraction",
-                    F.round(F.col("n_dv_marked") * 1.0 / F.col("n_rows"), 6),
-                )
-                .withColumn("rk", F.row_number().over(w))
-                .where(F.col("rk") <= COMPACT_PLAN_TOP_K)
-                .select("file_id")
-                .collect()
-            ]
-            spark.createDataFrame(
-                [(int(f),) for f in selected], "file_id int"
-            ).coalesce(1).write.mode("overwrite").parquet(
-                os.path.join(stage, "selected")
+        w = Window.orderBy(F.desc("dv_fraction"), F.asc("file_id"))
+        # the planned file set: K ints — bounded metadata, the one
+        # driver-side decision a table service makes per cycle
+        selected = [
+            r.file_id
+            for r in per_file.withColumn(
+                "dv_fraction",
+                F.round(F.col("n_dv_marked") * 1.0 / F.col("n_rows"), 6),
             )
-            # THE rewrite: live rows of the K planned files only —
-            # partition-pruned scan, broadcast DV anti-join, zero shuffle
-            base_b.where(F.col("file_id").isin(selected)).join(
-                F.broadcast(dv_b), ["file_id", "pos"], "left_anti"
-            ).write.partitionBy("file_id").mode("overwrite").parquet(
-                os.path.join(stage, "rewritten")
-            )
-            # DV reset for the rewritten files
-            dv_b.where(~F.col("file_id").isin(selected)).write.mode(
-                "overwrite"
-            ).parquet(os.path.join(stage, "dv_after"))
-            with open(os.path.join(stage, "_SUCCESS"), "w"):
-                pass
-        except BaseException:
-            shutil.rmtree(stage, ignore_errors=True)
-            raise
-        publish(stage, out)
+            .withColumn("rk", F.row_number().over(w))
+            .where(F.col("rk") <= COMPACT_PLAN_TOP_K)
+            .select("file_id")
+            .collect()
+        ]
+        spark.createDataFrame(
+            [(int(f),) for f in selected], "file_id int"
+        ).coalesce(1).write.mode("overwrite").parquet(
+            os.path.join(stage, "selected")
+        )
+        # THE rewrite: live rows of the K planned files only —
+        # partition-pruned scan, broadcast DV anti-join, zero shuffle
+        base_b.where(F.col("file_id").isin(selected)).join(
+            F.broadcast(dv_b), ["file_id", "pos"], "left_anti"
+        ).write.partitionBy("file_id").mode("overwrite").parquet(
+            os.path.join(stage, "rewritten")
+        )
+        # DV reset for the rewritten files
+        dv_b.where(~F.col("file_id").isin(selected)).write.mode(
+            "overwrite"
+        ).parquet(os.path.join(stage, "dv_after"))
+
+    out = caches.materialize(_compaction_exec_cache_dir(sf_dir), build)
 
     base = read_parquet(spark, os.path.join(out, "base"))
     dv = read_parquet(spark, os.path.join(out, "dv"))

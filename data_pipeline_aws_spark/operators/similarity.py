@@ -1638,51 +1638,42 @@ def ivfpq_index(spark: SparkSession, sf_dir: str):
     build under the established warm/cold accounting rule.
 
     Returns (index DataFrame, codebooks ndarray, centroids ndarray)."""
-    import shutil
-
     import numpy as np
     import pandas as pd
 
-    out = _ivfpq_cache_dir(sf_dir)
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
-        from data_pipeline_aws_spark.caches import publish, staging_dir
+    from data_pipeline_aws_spark import caches
 
-        stage = staging_dir(out)
-        try:
-            books = pq_codebooks(spark, sf_dir)
-            e = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-            cent_rows = (
-                e.filter(F.col("vec_id") < IVFPQ_LISTS).orderBy("vec_id").collect()
-            )
-            cents = np.stack(
-                [np.asarray(r.embedding, dtype=np.float64) for r in cent_rows]
-            )
+    def build(stage: str) -> None:
+        books = pq_codebooks(spark, sf_dir)
+        e = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+        cent_rows = (
+            e.filter(F.col("vec_id") < IVFPQ_LISTS).orderBy("vec_id").collect()
+        )
+        cents = np.stack(
+            [np.asarray(r.embedding, dtype=np.float64) for r in cent_rows]
+        )
 
-            def assign(batches):
-                for pdf in batches:
-                    m = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-                    d2 = ((m[:, None, :] - cents[None, :, :]) ** 2).sum(axis=2)
-                    yield pd.DataFrame(
-                        {
-                            "vec_id": pdf["vec_id"].to_numpy(),
-                            "list_id": d2.argmin(axis=1).astype("int32"),
-                        }
-                    )
+        def assign(batches):
+            for pdf in batches:
+                m = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
+                d2 = ((m[:, None, :] - cents[None, :, :]) ** 2).sum(axis=2)
+                yield pd.DataFrame(
+                    {
+                        "vec_id": pdf["vec_id"].to_numpy(),
+                        "list_id": d2.argmin(axis=1).astype("int32"),
+                    }
+                )
 
-            lists = e.mapInPandas(assign, "vec_id long, list_id int")
-            (
-                pq_encode(spark, sf_dir, books=books)
-                .select("vec_id", "code_key")
-                .join(lists, "vec_id")
-            ).write.mode("overwrite").parquet(os.path.join(stage, "index"))
-            np.save(os.path.join(stage, "books.npy"), books)
-            np.save(os.path.join(stage, "cents.npy"), cents)
-            with open(os.path.join(stage, "_SUCCESS"), "w"):
-                pass
-        except BaseException:
-            shutil.rmtree(stage, ignore_errors=True)
-            raise
-        publish(stage, out)
+        lists = e.mapInPandas(assign, "vec_id long, list_id int")
+        (
+            pq_encode(spark, sf_dir, books=books)
+            .select("vec_id", "code_key")
+            .join(lists, "vec_id")
+        ).write.mode("overwrite").parquet(os.path.join(stage, "index"))
+        np.save(os.path.join(stage, "books.npy"), books)
+        np.save(os.path.join(stage, "cents.npy"), cents)
+
+    out = caches.materialize(_ivfpq_cache_dir(sf_dir), build)
     books = np.load(os.path.join(out, "books.npy"))
     cents = np.load(os.path.join(out, "cents.npy"))
     return read_parquet(spark, os.path.join(out, "index")), books, cents
@@ -1955,61 +1946,47 @@ def ivfpq_inc_index(spark: SparkSession, sf_dir: str):
     pass while an append is O(batch).
 
     Returns (merged index DataFrame with its epoch column, books, cents)."""
-    import shutil
-
     import numpy as np
 
-    from data_pipeline_aws_spark.caches import link_or_copy, publish, staging_dir
+    from data_pipeline_aws_spark import caches
 
     last = _IVFPQ_INC_MOD - 1
     e = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    v1 = _ivfpq_inc_dir(sf_dir, "v1")
-    if not os.path.exists(os.path.join(v1, "_SUCCESS")):
-        stage = staging_dir(v1)
-        try:
-            hist = e.where(F.col("vec_id") % _IVFPQ_INC_MOD != last)
-            books = pq_codebooks(spark, sf_dir, frame=hist)
-            cent_rows = hist.orderBy("vec_id").limit(IVFPQ_LISTS).collect()
-            cents = np.stack(
-                [np.asarray(r.embedding, dtype=np.float64) for r in cent_rows]
-            )
-            _inc_encode_frame(spark, sf_dir, hist, books, cents).write.mode(
-                "overwrite"
-            ).parquet(os.path.join(stage, "index"))
-            np.save(os.path.join(stage, "books.npy"), books)
-            np.save(os.path.join(stage, "cents.npy"), cents)
-            with open(os.path.join(stage, "_SUCCESS"), "w"):
-                pass
-        except BaseException:
-            shutil.rmtree(stage, ignore_errors=True)
-            raise
-        publish(stage, v1)
-    v2 = _ivfpq_inc_dir(sf_dir, "v2")
-    if not os.path.exists(os.path.join(v2, "_SUCCESS")):
+
+    def build_v1(stage: str) -> None:
+        hist = e.where(F.col("vec_id") % _IVFPQ_INC_MOD != last)
+        books = pq_codebooks(spark, sf_dir, frame=hist)
+        cent_rows = hist.orderBy("vec_id").limit(IVFPQ_LISTS).collect()
+        cents = np.stack(
+            [np.asarray(r.embedding, dtype=np.float64) for r in cent_rows]
+        )
+        _inc_encode_frame(spark, sf_dir, hist, books, cents).write.mode(
+            "overwrite"
+        ).parquet(os.path.join(stage, "index"))
+        np.save(os.path.join(stage, "books.npy"), books)
+        np.save(os.path.join(stage, "cents.npy"), cents)
+
+    v1 = caches.materialize(_ivfpq_inc_dir(sf_dir, "v1"), build_v1)
+
+    def build_v2(stage: str) -> None:
         books = np.load(os.path.join(v1, "books.npy"))
         cents = np.load(os.path.join(v1, "cents.npy"))
-        stage = staging_dir(v2)
-        try:
-            ep1 = os.path.join(stage, "index", "epoch=1")
-            os.makedirs(ep1)
-            for name in os.listdir(os.path.join(v1, "index")):
-                # posix: hardlink (inode identity); objectstore: byte
-                # copy-forward, identity pinned by content_manifest instead
-                link_or_copy(
-                    os.path.join(v1, "index", name), os.path.join(ep1, name)
-                )
-            batch = e.where(F.col("vec_id") % _IVFPQ_INC_MOD == last)
-            _inc_encode_frame(spark, sf_dir, batch, books, cents).write.mode(
-                "overwrite"
-            ).parquet(os.path.join(stage, "index", "epoch=2"))
-            np.save(os.path.join(stage, "books.npy"), books)
-            np.save(os.path.join(stage, "cents.npy"), cents)
-            with open(os.path.join(stage, "_SUCCESS"), "w"):
-                pass
-        except BaseException:
-            shutil.rmtree(stage, ignore_errors=True)
-            raise
-        publish(stage, v2)
+        ep1 = os.path.join(stage, "index", "epoch=1")
+        os.makedirs(ep1)
+        for name in os.listdir(os.path.join(v1, "index")):
+            # posix: hardlink (inode identity); objectstore: byte
+            # copy-forward, identity pinned by content_manifest instead
+            caches.link_or_copy(
+                os.path.join(v1, "index", name), os.path.join(ep1, name)
+            )
+        batch = e.where(F.col("vec_id") % _IVFPQ_INC_MOD == last)
+        _inc_encode_frame(spark, sf_dir, batch, books, cents).write.mode(
+            "overwrite"
+        ).parquet(os.path.join(stage, "index", "epoch=2"))
+        np.save(os.path.join(stage, "books.npy"), books)
+        np.save(os.path.join(stage, "cents.npy"), cents)
+
+    v2 = caches.materialize(_ivfpq_inc_dir(sf_dir, "v2"), build_v2)
     books = np.load(os.path.join(v2, "books.npy"))
     cents = np.load(os.path.join(v2, "cents.npy"))
     return read_parquet(spark, os.path.join(v2, "index")), books, cents

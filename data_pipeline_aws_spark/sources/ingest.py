@@ -12,12 +12,12 @@ from __future__ import annotations
 
 import hashlib
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from data_pipeline_aws_spark import caches
 from data_pipeline_aws_spark.caches import sf_tag
 from data_pipeline_aws_spark.registry import query
 from data_pipeline_aws_spark.tables import read_parquet, table
@@ -33,73 +33,27 @@ EVENTS_JSON_SCHEMA = T.StructType(
 )
 
 
-_CODE_VERSION_CACHE: str | None = None
-
-
-def _code_version() -> str:
-    """Version token folded into every materialized-cache dir name: the hash
-    of every module whose code shapes cache CONTENTS — this module's writers
-    plus tables.py (ts normalization feeding them) and session.py (session
-    settings active at write time). Any edit to any of them moves every
-    cache key, so a _SUCCESS-marked artifact written by older code can never
-    satisfy a newer read path (stale caches would otherwise mask write-path
-    bugs from the oracle sweep).
-
-    Computed LAZILY, never at import time: executors import this module
-    from the addPyFile'd package ZIP (module-level mapInPandas fns like
-    warc_parse_batches are cloudpickled by reference), where open(__file__)
-    is impossible — and only the driver's cache-dir naming needs it."""
-    global _CODE_VERSION_CACHE
-    if _CODE_VERSION_CACHE is None:
-        here = os.path.dirname(os.path.abspath(__file__))
-        pkg = os.path.dirname(here)
-        h = hashlib.md5()
-        for path in (
-            __file__,
-            os.path.join(pkg, "tables.py"),
-            os.path.join(pkg, "session.py"),
-        ):
-            with open(path, "rb") as f:
-                h.update(f.read())
-        _CODE_VERSION_CACHE = h.hexdigest()[:8]
-    return _CODE_VERSION_CACHE
-
-
-def _evict_stale_caches(prefix: str) -> None:
-    """Best-effort delete of sibling cache dirs minted by OTHER code
-    versions (`{prefix}_<other-version>`): each revision would otherwise
-    strand a full parquet/JSON copy of the fixture in tempdir forever."""
-    import shutil
-
-    parent = tempfile.gettempdir()
-    try:
-        names = os.listdir(parent)
-    except OSError:
-        return
-    base = os.path.basename(prefix)
-    for name in names:
-        if name.startswith(base + "_") and name != f"{base}_{_code_version()}":
-            shutil.rmtree(os.path.join(parent, name), ignore_errors=True)
-
-
-def _json_cache_dir(sf_dir: str) -> str:
-    tag = sf_tag(sf_dir)
-    prefix = os.path.join(tempfile.gettempdir(), f"dpas_json_events_{tag}")
-    _evict_stale_caches(prefix)
-    return f"{prefix}_{_code_version()}"
+def _materialize(kind: str, sf_dir: str, build) -> str:
+    """This module's cache ``kind`` at ``sf_dir``, built once through
+    `caches.materialize` (the version token hashes this file, so it is
+    resolved at call time — executors import the module from the shipped
+    zip, where the file cannot be read)."""
+    return caches.materialize(
+        caches.versioned_cache_dir(kind, sf_dir, __file__), build
+    )
 
 
 def events_as_json(spark: SparkSession, sf_dir: str) -> str:
     """Materialize the events table as JSON-lines (once per sf_dir) — the
     raw-arrival format of the reference's event pipeline."""
-    out = _json_cache_dir(sf_dir)
-    marker = os.path.join(out, "_SUCCESS")
-    if not os.path.exists(marker):
-        e = table(spark, sf_dir, "events").select(
-            "event_id", "user_id", "event_type", "value", "props"
-        )
-        e.write.mode("overwrite").json(out)
-    return out
+    return _materialize(
+        "json_events",
+        sf_dir,
+        lambda stage: table(spark, sf_dir, "events")
+        .select("event_id", "user_id", "event_type", "value", "props")
+        .write.mode("overwrite")
+        .json(stage),
+    )
 
 
 @query(
@@ -152,13 +106,6 @@ ORDERS_CSV_SCHEMA = T.StructType(
 )
 
 
-def _cache_dir(kind: str, sf_dir: str) -> str:
-    tag = sf_tag(sf_dir)
-    prefix = os.path.join(tempfile.gettempdir(), f"dpas_{kind}_{tag}")
-    _evict_stale_caches(prefix)
-    return f"{prefix}_{_code_version()}"
-
-
 @query(
     "q_csv_ingest",
     oracle="""
@@ -174,11 +121,16 @@ def q_csv_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     Shortest-repr doubles survive CSV exactly, so the aggregate matches the
     parquet-scan oracle bit-for-bit. Schema is explicit — inferSchema would
     cost a second full pass over the data."""
-    out = _cache_dir("csv_orders", sf_dir)
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
-        table(spark, sf_dir, "orders").select(
-            "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice", "o_orderpriority"
-        ).write.mode("overwrite").option("header", True).option("escape", '"').csv(out)
+    out = _materialize(
+        "csv_orders",
+        sf_dir,
+        lambda stage: table(spark, sf_dir, "orders")
+        .select("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice", "o_orderpriority")
+        .write.mode("overwrite")
+        .option("header", True)
+        .option("escape", '"')
+        .csv(stage),
+    )
     c = read_csv(spark, out, ORDERS_CSV_SCHEMA)
     return c.groupBy("o_orderstatus", "o_orderpriority").agg(
         F.count(F.lit(1)).alias("n_orders"),
@@ -190,14 +142,17 @@ def partitioned_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Lineitem as a Hive-style ship_year-partitioned parquet table
     (materialized once per sf_dir) — the layout that turns year filters into
     directory pruning and enables dynamic partition pruning on joins."""
-    out = _cache_dir("part_lineitem", sf_dir)
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
-        li = table(spark, sf_dir, "lineitem").withColumn(
-            "ship_year", F.year("l_shipdate")
-        )
-        write_partitioned(
-            li.select("l_orderkey", "l_extendedprice", "ship_year"), out, "ship_year"
-        )
+    out = _materialize(
+        "part_lineitem",
+        sf_dir,
+        lambda stage: write_partitioned(
+            table(spark, sf_dir, "lineitem").select(
+                "l_orderkey", "l_extendedprice", F.year("l_shipdate").alias("ship_year")
+            ),
+            stage,
+            "ship_year",
+        ),
+    )
     return read_parquet(spark, out)
 
 
@@ -316,9 +271,11 @@ def q_orc_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     pushdown, column pruning — same scan contract as parquet); the aggregate
     matching the parquet-scan oracle proves values survive bit-for-bit.
     Balance sums in exact DECIMAL (see q_returned_items)."""
-    out = _cache_dir("orc_customer", sf_dir)
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
-        table(spark, sf_dir, "customer").write.mode("overwrite").orc(out)
+    out = _materialize(
+        "orc_customer",
+        sf_dir,
+        lambda stage: table(spark, sf_dir, "customer").write.mode("overwrite").orc(stage),
+    )
     c = spark.read.orc(out)
     return c.groupBy("c_mktsegment").agg(
         F.count(F.lit(1)).alias("n_custs"),
@@ -349,17 +306,16 @@ def q_corrupt_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     contract and DROPMALFORMED silently lies about volume. The oracle knows
     exactly which rows were corrupted, so good/bad counts and the surviving
     value sum are exactly checkable."""
-    out = _cache_dir("corrupt_jsonl", sf_dir)
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
-        e = table(spark, sf_dir, "events").select("event_id", "user_id", "value")
+
+    def build(stage: str) -> None:
         line = F.to_json(F.struct("event_id", "user_id", "value"))
-        (
-            e.select(
-                F.when(F.col("event_id") % 97 == 0, F.concat(F.lit("!corrupt!"), line))
-                .otherwise(line)
-                .alias("value")
-            ).write.mode("overwrite").text(out)
-        )
+        table(spark, sf_dir, "events").select(
+            F.when(F.col("event_id") % 97 == 0, F.concat(F.lit("!corrupt!"), line))
+            .otherwise(line)
+            .alias("value")
+        ).write.mode("overwrite").text(stage)
+
+    out = _materialize("corrupt_jsonl", sf_dir, build)
     schema = T.StructType(
         [
             T.StructField("event_id", T.LongType()),
@@ -523,14 +479,18 @@ def q_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan with task-per-tiny-file overhead; scheduled compaction is the fix,
     and because it is a pure rewrite it can run concurrently with readers
     (writers park output in a temp dir and swap)."""
-    frag = _cache_dir("frag_events", sf_dir)
-    if not os.path.exists(os.path.join(frag, "_SUCCESS")):
-        table(spark, sf_dir, "events").select(
-            "event_id", "event_type", "value"
-        ).repartition(200).write.mode("overwrite").parquet(frag)
-    compacted = _cache_dir("compacted_events", sf_dir)
-    if not os.path.exists(os.path.join(compacted, "_SUCCESS")):
-        compact_parquet(spark, frag, compacted)
+    frag = _materialize(
+        "frag_events",
+        sf_dir,
+        lambda stage: table(spark, sf_dir, "events")
+        .select("event_id", "event_type", "value")
+        .repartition(200)
+        .write.mode("overwrite")
+        .parquet(stage),
+    )
+    compacted = _materialize(
+        "compacted_events", sf_dir, lambda stage: compact_parquet(spark, frag, stage)
+    )
     back = read_parquet(spark, compacted)
     return back.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_events"),
@@ -566,15 +526,17 @@ def q_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     no data read) — fine as an explicit opt-in here, while production
     catalogs pin the merged schema in the metastore instead of re-deriving
     it per query."""
-    out = _cache_dir("schema_evo_events", sf_dir)
-    if not os.path.exists(os.path.join(out, "gen2", "_SUCCESS")):
+
+    def build(stage: str) -> None:
         e = table(spark, sf_dir, "events").select("event_id", "event_type", "value")
         e.where(F.col("event_id") % 2 == 0).write.mode("overwrite").parquet(
-            os.path.join(out, "gen1")
+            os.path.join(stage, "gen1")
         )
         e.where(F.col("event_id") % 2 == 1).withColumn(
             "session_bucket", (F.col("event_id") % 16).cast("long")
-        ).write.mode("overwrite").parquet(os.path.join(out, "gen2"))
+        ).write.mode("overwrite").parquet(os.path.join(stage, "gen2"))
+
+    out = _materialize("schema_evo_events", sf_dir, build)
     back = spark.read.option("mergeSchema", "true").option(
         "recursiveFileLookup", "true"
     ).parquet(out)
@@ -652,37 +614,29 @@ def q_schema_evolution_nested(spark: SparkSession, sf_dir: str) -> DataFrame:
     no shuffle, no UDF. mergeSchema is a footer-only pass exactly as in
     q_schema_evolution; a production catalog would pin the merged schema
     instead (see q_catalog_stats)."""
-    out = _cache_dir("schema_evo_nested", sf_dir)
-    if not os.path.exists(os.path.join(out, "gen2", "_SUCCESS")):
-        li = table(spark, sf_dir, "lineitem")
 
-        def gen_frame(parity: int, with_tax: bool) -> DataFrame:
+    def build(stage: str) -> None:
+        li = table(spark, sf_dir, "lineitem")
+        for gen, parity, with_tax in (("gen1", 0, False), ("gen2", 1, True)):
             fields = [
                 F.col("l_linenumber").cast("int").alias("linenumber"),
-                F.expr("cast(round(l_quantity * 100) as bigint)").alias(
-                    "qty_cents"
-                ),
+                F.expr("cast(round(l_quantity * 100) as bigint)").alias("qty_cents"),
             ]
             if with_tax:
                 fields.append(
-                    F.expr("cast(round(l_tax * 1000) as bigint)").alias(
-                        "tax_milli"
-                    )
+                    F.expr("cast(round(l_tax * 1000) as bigint)").alias("tax_milli")
                 )
-            return (
+            (
                 li.where(F.col("l_orderkey") % 2 == parity)
                 .select("l_orderkey", F.struct(*fields).alias("c"))
                 .groupBy("l_orderkey")
                 .agg(F.sort_array(F.collect_list("c")).alias("components"))
                 .select(F.col("l_orderkey").alias("orderkey"), "components")
+                .write.mode("overwrite")
+                .parquet(os.path.join(stage, gen))
             )
 
-        gen_frame(0, False).write.mode("overwrite").parquet(
-            os.path.join(out, "gen1")
-        )
-        gen_frame(1, True).write.mode("overwrite").parquet(
-            os.path.join(out, "gen2")
-        )
+    out = _materialize("schema_evo_nested", sf_dir, build)
     back = (
         spark.read.option("mergeSchema", "true")
         .option("recursiveFileLookup", "true")
@@ -842,11 +796,12 @@ def q_gdpr_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly the tombstoned rows. (Deletion-vector formats move the same
     trick into file metadata; plain parquet does it at partition grain.)"""
     src = partitioned_lineitem(spark, sf_dir)
-    out = _cache_dir("gdpr_lineitem", sf_dir)
-    if not os.path.exists(os.path.join(out, "_DONE")):
-        write_partitioned(src, out, "ship_year")  # the pre-existing table
-        gdpr_delete_partitions(src, out, F.col("l_orderkey") % 1000 == 0, "ship_year")
-        open(os.path.join(out, "_DONE"), "w").close()
+
+    def build(stage: str) -> None:
+        write_partitioned(src, stage, "ship_year")  # the pre-existing table
+        gdpr_delete_partitions(src, stage, F.col("l_orderkey") % 1000 == 0, "ship_year")
+
+    out = _materialize("gdpr_lineitem", sf_dir, build)
     back = read_parquet(spark, out)
     return back.groupBy(F.col("ship_year").cast("int").alias("ship_year")).agg(
         F.count(F.lit(1)).alias("n_lines"),
@@ -906,17 +861,17 @@ def q_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_sources_sinks.py asserts the actual layout property
     (per-file bounding boxes over both dimensions collapse vs. the
     unclustered baseline)."""
-    out = _cache_dir("zorder_lineitem", sf_dir)
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
-        (
-            table(spark, sf_dir, "lineitem")
-            .select("l_orderkey", "l_partkey", "l_suppkey", "l_quantity")
-            .withColumn("zval", _zval_col())
-            .repartitionByRange(16, "zval")
-            .sortWithinPartitions("zval")
-            .write.mode("overwrite")
-            .parquet(out)
-        )
+    out = _materialize(
+        "zorder_lineitem",
+        sf_dir,
+        lambda stage: table(spark, sf_dir, "lineitem")
+        .select("l_orderkey", "l_partkey", "l_suppkey", "l_quantity")
+        .withColumn("zval", _zval_col())
+        .repartitionByRange(16, "zval")
+        .sortWithinPartitions("zval")
+        .write.mode("overwrite")
+        .parquet(stage),
+    )
     back = read_parquet(spark, out)
     # SUM(zval) is an exact integer checksum of every curve key — the oracle
     # recomputes it in SQL, so a single wrong bit anywhere fails the hash.
@@ -1129,13 +1084,16 @@ def q_text_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     thousands of splits in arbitrary order, so any parse that depends on
     position is wrong by construction. Schema-on-read costs one map-side
     projection; no shuffle is added over scanning parquet."""
-    out = _cache_dir("txt_documents", sf_dir)
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
-        table(spark, sf_dir, "documents").select(
-            F.concat_ws("\t", F.col("doc_id").cast("string"), "lang", "text").alias(
-                "value"
-            )
-        ).write.mode("overwrite").text(out)
+    out = _materialize(
+        "txt_documents",
+        sf_dir,
+        lambda stage: table(spark, sf_dir, "documents")
+        .select(
+            F.concat_ws("\t", F.col("doc_id").cast("string"), "lang", "text").alias("value")
+        )
+        .write.mode("overwrite")
+        .text(stage),
+    )
     lines = spark.read.text(out)
     parsed = lines.select(
         F.split("value", "\t", 3).alias("parts")
@@ -1179,13 +1137,18 @@ def q_gzip_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream-inline in the record reader (zlib in the JVM scan, no extra
     stage); everything downstream of the scan is identical to the
     uncompressed q_text_ingest plan."""
-    out = _cache_dir("gz_documents", sf_dir)
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
-        table(spark, sf_dir, "documents").repartition(WARC_SHARDS).select(
-            F.concat_ws("\t", F.col("doc_id").cast("string"), "lang", "text").alias(
-                "value"
-            )
-        ).write.mode("overwrite").option("compression", "gzip").text(out)
+    out = _materialize(
+        "gz_documents",
+        sf_dir,
+        lambda stage: table(spark, sf_dir, "documents")
+        .repartition(WARC_SHARDS)
+        .select(
+            F.concat_ws("\t", F.col("doc_id").cast("string"), "lang", "text").alias("value")
+        )
+        .write.mode("overwrite")
+        .option("compression", "gzip")
+        .text(stage),
+    )
     lines = spark.read.text(out)
     parsed = lines.select(F.split("value", "\t", 3).alias("parts")).select(
         F.col("parts").getItem(1).alias("lang"),
@@ -1296,8 +1259,8 @@ def q_warc_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     Parsing is one sequential pass per shard inside Arrow-batched
     mapInPandas; no shuffle, no driver involvement; emitted rows carry
     only id + checksum, never the payload."""
-    out = _cache_dir("warc_documents", sf_dir)
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
+
+    def build(stage: str) -> None:
         rec = F.concat(
             F.lit("WARC/1.0\r\nWARC-Type: conversion\r\nWARC-Record-ID: "),
             F.concat(F.lit("<urn:dpas:doc:"), F.col("doc_id").cast("string")),
@@ -1313,7 +1276,9 @@ def q_warc_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         table(spark, sf_dir, "documents").repartition(WARC_SHARDS).select(
             rec.alias("value")
-        ).write.mode("overwrite").text(out)
+        ).write.mode("overwrite").text(stage)
+
+    out = _materialize("warc_documents", sf_dir, build)
 
     shards = (
         spark.read.format("binaryFile").option("pathGlobFilter", "part-*").load(out)
@@ -1459,33 +1424,19 @@ def q_warcgz_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     task per shard); inflation + parse is one sequential pass per shard
     inside Arrow-batched mapInPandas; no shuffle, no driver data path;
     rows carry id + checksum, never payloads."""
-    from data_pipeline_aws_spark.caches import publish, staging_dir
 
-    out = _cache_dir("warcgz_documents", sf_dir)
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
-        stage = staging_dir(out)
-        os.makedirs(stage, exist_ok=True)
-        try:
-            counts = (
-                table(spark, sf_dir, "documents")
-                .select("doc_id", "lang", "text")
-                .repartition(WARC_SHARDS)
-                .mapInPandas(
-                    warcgz_write_partition(stage),
-                    "n_records long, n_bytes long",
-                )
-                .collect()  # bounded: WARC_SHARDS one-row receipts
-            )
-            if sum(r.n_records for r in counts) == 0:
-                raise ValueError("warcgz writer produced no records")
-            with open(os.path.join(stage, "_SUCCESS"), "w"):
-                pass
-        except BaseException:
-            import shutil
+    def build(stage: str) -> None:
+        counts = (
+            table(spark, sf_dir, "documents")
+            .select("doc_id", "lang", "text")
+            .repartition(WARC_SHARDS)
+            .mapInPandas(warcgz_write_partition(stage), "n_records long, n_bytes long")
+            .collect()  # bounded: WARC_SHARDS one-row receipts
+        )
+        if sum(r.n_records for r in counts) == 0:
+            raise ValueError("warcgz writer produced no records")
 
-            shutil.rmtree(stage, ignore_errors=True)
-            raise
-        publish(stage, out)
+    out = _materialize("warcgz_documents", sf_dir, build)
 
     shards = (
         spark.read.format("binaryFile")
@@ -1530,9 +1481,8 @@ def q_binary_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     straight into the mapInPandas codec plumbing of multimodal/media.py.
     The 100-file fixture is written once per sf_dir+code-version by the
     driver process (bounded ingest fixture, not a data-path collect)."""
-    out = _cache_dir("binfiles", sf_dir)
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
-        os.makedirs(out, exist_ok=True)
+
+    def build(stage: str) -> None:
         ids = [
             r.vec_id
             for r in table(spark, sf_dir, "embeddings")
@@ -1542,10 +1492,10 @@ def q_binary_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         ]
         for i in ids:
             payload = f"payload-{i}-" + "x" * (i % 50)
-            with open(os.path.join(out, f"{i}.bin"), "wb") as fh:
+            with open(os.path.join(stage, f"{i}.bin"), "wb") as fh:
                 fh.write(payload.encode("utf-8"))
-        with open(os.path.join(out, "_SUCCESS"), "w") as fh:
-            fh.write("")
+
+    out = _materialize("binfiles", sf_dir, build)
     b = (
         spark.read.format("binaryFile")
         .option("pathGlobFilter", "*.bin")
@@ -1671,16 +1621,16 @@ def q_range_sort_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     written) on skewed or tiny inputs — so the oracle asserts invariants
     only: file count within [1, 8] as a boolean verdict (never an exact
     pin), row conservation, disjointness."""
-    out = _cache_dir("range_sorted_orders", sf_dir)
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
-        (
-            table(spark, sf_dir, "orders")
-            .select("o_orderkey", "o_totalprice")
-            .repartitionByRange(8, "o_totalprice")
-            .sortWithinPartitions("o_totalprice")
-            .write.mode("overwrite")
-            .parquet(out)
-        )
+    out = _materialize(
+        "range_sorted_orders",
+        sf_dir,
+        lambda stage: table(spark, sf_dir, "orders")
+        .select("o_orderkey", "o_totalprice")
+        .repartitionByRange(8, "o_totalprice")
+        .sortWithinPartitions("o_totalprice")
+        .write.mode("overwrite")
+        .parquet(stage),
+    )
     back = read_parquet(spark, out).select(
         F.input_file_name().alias("f"), "o_totalprice"
     )

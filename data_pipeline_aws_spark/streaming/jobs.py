@@ -249,43 +249,29 @@ def q_stream_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     drain — the same warm/cold semantics as q_partitioned_sink. The earlier
     write-every-run shape was the one key drifting toward the 2x-of-r1
     perf contract (0.51 → 1.02 s) purely on repeated tempdir writes."""
-    import shutil
+    from data_pipeline_aws_spark import caches
 
-    from data_pipeline_aws_spark.caches import publish, staging_dir
+    # The whole multi-epoch layout is drained into a staging dir and
+    # published at once: partial drains never become visible at the cache
+    # path, and two concurrent sessions can't interleave epoch dirs (the
+    # loser's complete build is discarded — content is deterministic).
+    def build(stage: str) -> None:
+        stream = _stream_events(spark, sf_dir).select(*_SINK_COLS)
 
-    out = _stream_sink_cache_dir(sf_dir)
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
-        # Build the whole multi-epoch layout in a per-process STAGING dir
-        # and publish it atomically: partial drains never become visible
-        # at the cache path, and two concurrent sessions can't interleave
-        # epoch dirs (the loser's complete build is simply discarded —
-        # content is deterministic either way).
-        stage = staging_dir(out)
-        try:
-            stream = _stream_events(spark, sf_dir).select(*_SINK_COLS)
+        def land(batch_df: DataFrame, epoch_id: int) -> None:
+            batch_df.write.mode("overwrite").parquet(
+                os.path.join(stage, f"epoch={epoch_id}")
+            )
 
-            def land(batch_df: DataFrame, epoch_id: int) -> None:
-                batch_df.write.mode("overwrite").parquet(
-                    os.path.join(stage, f"epoch={epoch_id}")
-                )
+        with _stream_partitions(spark):
+            q = stream.writeStream.foreachBatch(land).start()
+            try:
+                q.processAllAvailable()
+            finally:
+                q.stop()
+                q.awaitTermination(30)
 
-            with _stream_partitions(spark):
-                q = stream.writeStream.foreachBatch(land).start()
-                try:
-                    q.processAllAvailable()
-                finally:
-                    q.stop()
-                    q.awaitTermination(30)
-            # the sentinel marks the whole multi-epoch layout complete
-            with open(os.path.join(stage, "_SUCCESS"), "w"):
-                pass
-        except BaseException:
-            # a crashed drain must not strand a partial fixture copy in
-            # tempdir (the leak-free guarantee the old per-run tempdir paid
-            # an eager collect to keep)
-            shutil.rmtree(stage, ignore_errors=True)
-            raise
-        publish(stage, out)
+    out = caches.materialize(_stream_sink_cache_dir(sf_dir), build)
     # Every build lands under fresh file names, so a schema memo would
     # always miss; the writer knows the layout's schema instead: the
     # stream's columns plus the `epoch=<id>` partition column.
@@ -348,52 +334,42 @@ def stream_merge_layout(spark: SparkSession, sf_dir: str) -> str:
     DV/delta sidecars, landed through the real micro-batch drain) and
     return its directory — the one landing definition q_stream_merge and
     the snapshot readers (q_time_travel) share."""
-    import shutil
-
-    from data_pipeline_aws_spark.caches import publish, staging_dir
+    from data_pipeline_aws_spark import caches
     from data_pipeline_aws_spark.operators.setops import (
         merge_dv_base,
         merge_dv_feed,
     )
 
-    out = _stream_merge_cache_dir(sf_dir)
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
-        stage = staging_dir(out)
-        try:
-            base = merge_dv_base(spark, sf_dir)
-            base.write.mode("overwrite").parquet(os.path.join(stage, "base"))
-            base_back = read_parquet(spark, os.path.join(stage, "base"))
-            feed = merge_dv_feed(base_back)
-            # the feed arrives as STREAM_MERGE_SLICES files — deterministic
-            # key slices, one file each, so the file source triggers one
-            # micro-batch per slice
-            for s in range(STREAM_MERGE_SLICES):
-                feed.where(
-                    F.pmod(F.col("o_orderkey"), STREAM_MERGE_SLICES) == s
-                ).coalesce(1).write.mode("overwrite").parquet(
-                    os.path.join(stage, "feed_in", f"slice={s}")
-                )
-            stream = (
-                spark.readStream.schema("o_orderkey long, op string, new_cents long")
-                .option("recursiveFileLookup", "true")
-                .option("pathGlobFilter", "*.parquet")
-                .option("maxFilesPerTrigger", "1")
-                .parquet(os.path.join(stage, "feed_in"))
+    def build(stage: str) -> None:
+        base = merge_dv_base(spark, sf_dir)
+        base.write.mode("overwrite").parquet(os.path.join(stage, "base"))
+        base_back = read_parquet(spark, os.path.join(stage, "base"))
+        feed = merge_dv_feed(base_back)
+        # the feed arrives as STREAM_MERGE_SLICES files — deterministic
+        # key slices, one file each, so the file source triggers one
+        # micro-batch per slice
+        for s in range(STREAM_MERGE_SLICES):
+            feed.where(
+                F.pmod(F.col("o_orderkey"), STREAM_MERGE_SLICES) == s
+            ).coalesce(1).write.mode("overwrite").parquet(
+                os.path.join(stage, "feed_in", f"slice={s}")
             )
-            with _stream_partitions(spark):
-                q = stream.writeStream.foreachBatch(merge_land_fn(stage)).start()
-                try:
-                    q.processAllAvailable()
-                finally:
-                    q.stop()
-                    q.awaitTermination(30)
-            with open(os.path.join(stage, "_SUCCESS"), "w"):
-                pass
-        except BaseException:
-            shutil.rmtree(stage, ignore_errors=True)
-            raise
-        publish(stage, out)
-    return out
+        stream = (
+            spark.readStream.schema("o_orderkey long, op string, new_cents long")
+            .option("recursiveFileLookup", "true")
+            .option("pathGlobFilter", "*.parquet")
+            .option("maxFilesPerTrigger", "1")
+            .parquet(os.path.join(stage, "feed_in"))
+        )
+        with _stream_partitions(spark):
+            q = stream.writeStream.foreachBatch(merge_land_fn(stage)).start()
+            try:
+                q.processAllAvailable()
+            finally:
+                q.stop()
+                q.awaitTermination(30)
+
+    return caches.materialize(_stream_merge_cache_dir(sf_dir), build)
 
 
 def merge_land_fn(stage: str):
@@ -716,70 +692,62 @@ def q_snapshot_expire(spark: SparkSession, sf_dir: str) -> DataFrame:
     report aggregates are 1-row partials crossJoined as broadcasts.
     Epoch identity is content-canonicalized by slice key (the
     q_time_travel convention)."""
-    import shutil
-
-    from data_pipeline_aws_spark.caches import publish, staging_dir
+    from data_pipeline_aws_spark import caches
     from data_pipeline_aws_spark.operators.setops import MERGE_DV_FILES
 
     s, r = STREAM_MERGE_SLICES, STREAM_EXPIRE_RETAIN
     src = stream_merge_layout(spark, sf_dir)
-    out = _snap_expire_cache_dir(sf_dir)
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
-        stage = staging_dir(out)
-        try:
-            base = read_parquet(spark, os.path.join(src, "base"))
-            dv = read_parquet(spark, os.path.join(src, "dv"))
-            delta = read_parquet(spark, os.path.join(src, "delta"))
-            # DV addresses resolve to keys via one broadcast base probe so
-            # the slice map covers delete-only epochs (_epoch_slice_map)
-            dv_keys = base.join(
-                F.broadcast(dv.select("file_id", "pos", "epoch")),
-                ["file_id", "pos"],
-            ).select("epoch", "o_orderkey")
-            emap = _epoch_slice_map(delta, dv_keys, s)
-            dv_s = dv.join(F.broadcast(emap), "epoch")
-            delta_s = delta.join(F.broadcast(emap), "epoch")
-            horizon = s - r
-            # fold: survivors keep their (file_id, pos); expired deltas
-            # become fresh base files ABOVE the original file range
-            survivors = base.join(
-                F.broadcast(
-                    dv_s.where(F.col("slice") < horizon).select("file_id", "pos")
+
+    def build(stage: str) -> None:
+        base = read_parquet(spark, os.path.join(src, "base"))
+        dv = read_parquet(spark, os.path.join(src, "dv"))
+        delta = read_parquet(spark, os.path.join(src, "delta"))
+        # DV addresses resolve to keys via one broadcast base probe so
+        # the slice map covers delete-only epochs (_epoch_slice_map)
+        dv_keys = base.join(
+            F.broadcast(dv.select("file_id", "pos", "epoch")),
+            ["file_id", "pos"],
+        ).select("epoch", "o_orderkey")
+        emap = _epoch_slice_map(delta, dv_keys, s)
+        dv_s = dv.join(F.broadcast(emap), "epoch")
+        delta_s = delta.join(F.broadcast(emap), "epoch")
+        horizon = s - r
+        # fold: survivors keep their (file_id, pos); expired deltas
+        # become fresh base files ABOVE the original file range
+        survivors = base.join(
+            F.broadcast(
+                dv_s.where(F.col("slice") < horizon).select("file_id", "pos")
+            ),
+            ["file_id", "pos"],
+            "left_anti",
+        )
+        wnew = Window.partitionBy("file_id").orderBy("o_orderkey")
+        folded_new = (
+            delta_s.where(F.col("slice") < horizon)
+            .select(
+                "o_orderkey",
+                "cents",
+                (F.lit(MERGE_DV_FILES) + F.col("slice")).cast("int").alias(
+                    "file_id"
                 ),
-                ["file_id", "pos"],
-                "left_anti",
             )
-            wnew = Window.partitionBy("file_id").orderBy("o_orderkey")
-            folded_new = (
-                delta_s.where(F.col("slice") < horizon)
-                .select(
-                    "o_orderkey",
-                    "cents",
-                    (F.lit(MERGE_DV_FILES) + F.col("slice")).cast("int").alias(
-                        "file_id"
-                    ),
-                )
-                .withColumn("pos", F.row_number().over(wnew))
-            )
-            survivors.select("o_orderkey", "cents", "file_id", "pos").unionByName(
-                folded_new.select("o_orderkey", "cents", "file_id", "pos")
-            ).write.mode("overwrite").parquet(os.path.join(stage, "base"))
-            dv_s.where(F.col("slice") >= horizon).select(
-                "file_id", "pos", "epoch"
-            ).write.partitionBy("epoch").mode("overwrite").parquet(
-                os.path.join(stage, "dv")
-            )
-            delta_s.where(F.col("slice") >= horizon).select(
-                "o_orderkey", "cents", "epoch"
-            ).write.partitionBy("epoch").mode("overwrite").parquet(
-                os.path.join(stage, "delta")
-            )
-            with open(os.path.join(stage, "_SUCCESS"), "w"):
-                pass
-        except BaseException:
-            shutil.rmtree(stage, ignore_errors=True)
-            raise
-        publish(stage, out)
+            .withColumn("pos", F.row_number().over(wnew))
+        )
+        survivors.select("o_orderkey", "cents", "file_id", "pos").unionByName(
+            folded_new.select("o_orderkey", "cents", "file_id", "pos")
+        ).write.mode("overwrite").parquet(os.path.join(stage, "base"))
+        dv_s.where(F.col("slice") >= horizon).select(
+            "file_id", "pos", "epoch"
+        ).write.partitionBy("epoch").mode("overwrite").parquet(
+            os.path.join(stage, "dv")
+        )
+        delta_s.where(F.col("slice") >= horizon).select(
+            "o_orderkey", "cents", "epoch"
+        ).write.partitionBy("epoch").mode("overwrite").parquet(
+            os.path.join(stage, "delta")
+        )
+
+    out = caches.materialize(_snap_expire_cache_dir(sf_dir), build)
 
     base2 = read_parquet(spark, os.path.join(out, "base"))
     dv2 = read_parquet(spark, os.path.join(out, "dv"))
@@ -930,24 +898,14 @@ def vacuum_fixture(spark: SparkSession, sf_dir: str) -> str:
     and must never see planted garbage or deletions."""
     import shutil
 
-    from data_pipeline_aws_spark.caches import publish, staging_dir
+    from data_pipeline_aws_spark import caches
 
-    out = _vacuum_cache_dir(sf_dir)
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
+    def build(stage: str) -> None:
         src = stream_merge_layout(spark, sf_dir)
-        stage = staging_dir(out)
-        try:
-            for sub in ("base", "dv", "delta"):
-                shutil.copytree(
-                    os.path.join(src, sub), os.path.join(stage, sub)
-                )
-            with open(os.path.join(stage, "_SUCCESS"), "w"):
-                pass
-        except BaseException:
-            shutil.rmtree(stage, ignore_errors=True)
-            raise
-        publish(stage, out)
-    return out
+        for sub in ("base", "dv", "delta"):
+            shutil.copytree(os.path.join(src, sub), os.path.join(stage, sub))
+
+    return caches.materialize(_vacuum_cache_dir(sf_dir), build)
 
 
 def _merged_count(spark: SparkSession, layout: str) -> int:
@@ -1196,106 +1154,98 @@ def q_stream_stream_left(spark: SparkSession, sf_dir: str) -> DataFrame:
     collect+createDataFrame copy — and warm passes read the committed
     layout back like every other sink-cache key (cold bench still pays
     the full two-stream drain)."""
-    import shutil
     import tempfile
 
-    from data_pipeline_aws_spark.caches import publish, staging_dir, versioned_cache_dir
+    from data_pipeline_aws_spark import caches
 
-    out = versioned_cache_dir("stream_left", sf_dir, __file__)
-    if os.path.exists(os.path.join(out, "_SUCCESS")):
-        return read_parquet(spark, out)
-    arrival = tempfile.mkdtemp(prefix="dpas_stream_left_")
-    try:
-        ev = _ensure_event_time(
-            table(spark, sf_dir, "events").select(
-                "event_id", "user_id", "event_type", "ts"
+    def build(stage: str) -> None:
+        with tempfile.TemporaryDirectory(
+            prefix="dpas_stream_left_", ignore_cleanup_errors=True
+        ) as arrival:
+            ev = _ensure_event_time(
+                table(spark, sf_dir, "events").select(
+                    "event_id", "user_id", "event_type", "ts"
+                )
             )
-        )
-        # TWO sentinel batches: b1 advances both watermarks past every real
-        # row's expiry, and b2 is the data-carrying batch in which that
-        # advanced watermark actually evicts — outer-join state eviction
-        # uses the watermark committed at the PREVIOUS batch end (the same
-        # two-phase contract q_stream_late_data documents), so the last
-        # unmatched purchases flush during b2, not b1.
-        def _sentinels(pid: int, cid: int, ts: str) -> DataFrame:
-            return spark.createDataFrame(
-                [(pid, pid, "purchase"), (cid, cid, "click")],
-                "event_id long, user_id long, event_type string",
-            ).select(
-                "event_id",
-                "user_id",
-                "event_type",
-                F.lit(ts).cast("timestamp").alias("ts"),
-            )
+            # TWO sentinel batches: b1 advances both watermarks past every real
+            # row's expiry, and b2 is the data-carrying batch in which that
+            # advanced watermark actually evicts — outer-join state eviction
+            # uses the watermark committed at the PREVIOUS batch end (the same
+            # two-phase contract q_stream_late_data documents), so the last
+            # unmatched purchases flush during b2, not b1.
+            def _sentinels(pid: int, cid: int, ts: str) -> DataFrame:
+                return spark.createDataFrame(
+                    [(pid, pid, "purchase"), (cid, cid, "click")],
+                    "event_id long, user_id long, event_type string",
+                ).select(
+                    "event_id",
+                    "user_id",
+                    "event_type",
+                    F.lit(ts).cast("timestamp").alias("ts"),
+                )
 
-        ev.coalesce(1).write.parquet(os.path.join(arrival, "b0"))
-        _sentinels(-1, -2, "2024-03-01 00:00:00").coalesce(1).write.parquet(
-            os.path.join(arrival, "b1")
-        )
-        _sentinels(-3, -4, "2024-04-01 00:00:00").coalesce(1).write.parquet(
-            os.path.join(arrival, "b2")
-        )
-        base = time.time()
-        for i, b in enumerate(("b0", "b1", "b2")):
-            d = os.path.join(arrival, b)
-            for f in os.listdir(d):
-                os.utime(os.path.join(d, f), (base + 10 * i, base + 10 * i))
-        # ev's schema IS the landed files' schema (b0 is ev written as-is;
-        # the sentinel batches select the same four columns) — no need for
-        # a driver-side re-read job of b0 to recover it (r13 ADVICE's
-        # late-data finding, same pattern here).
-        stream = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(arrival + "/*")
-        )
-        purchases = (
-            stream.where(F.col("event_type") == "purchase")
-            .select(
-                F.col("event_id").alias("purchase_id"),
-                F.col("user_id").alias("p_user"),
-                F.col("ts").alias("p_ts"),
+            ev.coalesce(1).write.parquet(os.path.join(arrival, "b0"))
+            _sentinels(-1, -2, "2024-03-01 00:00:00").coalesce(1).write.parquet(
+                os.path.join(arrival, "b1")
             )
-            .withWatermark("p_ts", "10 minutes")
-        )
-        clicks = (
-            stream.where(F.col("event_type") == "click")
-            .select(
-                F.col("event_id").alias("click_id"),
-                F.col("user_id").alias("c_user"),
-                F.col("ts").alias("c_ts"),
+            _sentinels(-3, -4, "2024-04-01 00:00:00").coalesce(1).write.parquet(
+                os.path.join(arrival, "b2")
             )
-            .withWatermark("c_ts", "10 minutes")
-        )
-        joined = purchases.join(
-            clicks,
-            F.expr(
-                "p_user = c_user AND "
-                "c_ts BETWEEN p_ts - INTERVAL 30 MINUTES AND p_ts"
-            ),
-            "leftOuter",
-        ).select("purchase_id", "click_id", F.col("p_user").alias("user_id"))
-        # The sentinel's own null-padded row is dropped AFTER the drain:
-        # a `purchase_id >= 0` filter in the streaming plan gets pushed
-        # below the EventTimeWatermark node, the purchase-side watermark
-        # never observes the sentinel, and the last real unmatched
-        # purchases are withheld forever (found the hard way — one
-        # missing row at sf0.01).
-        res = _run_to_completion(joined, "append").where(
-            F.col("purchase_id") >= 0
-        )
-        # arrival dir is scratch — land the drained (already driver-side)
-        # memory-sink result as the published layout before removing it
-        stage = staging_dir(out)
-        try:
+            base = time.time()
+            for i, b in enumerate(("b0", "b1", "b2")):
+                d = os.path.join(arrival, b)
+                for f in os.listdir(d):
+                    os.utime(os.path.join(d, f), (base + 10 * i, base + 10 * i))
+            # ev's schema IS the landed files' schema (b0 is ev written as-is;
+            # the sentinel batches select the same four columns) — no need for
+            # a driver-side re-read job of b0 to recover it (r13 ADVICE's
+            # late-data finding, same pattern here).
+            stream = (
+                spark.readStream.schema(ev.schema)
+                .option("maxFilesPerTrigger", "1")
+                .parquet(arrival + "/*")
+            )
+            purchases = (
+                stream.where(F.col("event_type") == "purchase")
+                .select(
+                    F.col("event_id").alias("purchase_id"),
+                    F.col("user_id").alias("p_user"),
+                    F.col("ts").alias("p_ts"),
+                )
+                .withWatermark("p_ts", "10 minutes")
+            )
+            clicks = (
+                stream.where(F.col("event_type") == "click")
+                .select(
+                    F.col("event_id").alias("click_id"),
+                    F.col("user_id").alias("c_user"),
+                    F.col("ts").alias("c_ts"),
+                )
+                .withWatermark("c_ts", "10 minutes")
+            )
+            joined = purchases.join(
+                clicks,
+                F.expr(
+                    "p_user = c_user AND "
+                    "c_ts BETWEEN p_ts - INTERVAL 30 MINUTES AND p_ts"
+                ),
+                "leftOuter",
+            ).select("purchase_id", "click_id", F.col("p_user").alias("user_id"))
+            # The sentinel's own null-padded row is dropped AFTER the drain:
+            # a `purchase_id >= 0` filter in the streaming plan gets pushed
+            # below the EventTimeWatermark node, the purchase-side watermark
+            # never observes the sentinel, and the last real unmatched
+            # purchases are withheld forever (found the hard way — one
+            # missing row at sf0.01).
+            res = _run_to_completion(joined, "append").where(
+                F.col("purchase_id") >= 0
+            )
+            # arrival dir is scratch — land the drained (already driver-side)
+            # memory-sink result as the published layout before removing it
             res.write.mode("overwrite").parquet(stage)
-        except BaseException:
-            shutil.rmtree(stage, ignore_errors=True)
-            raise
-        publish(stage, out)
-        return read_parquet(spark, out)
-    finally:
-        shutil.rmtree(arrival, ignore_errors=True)
+
+    out = caches.versioned_cache_dir("stream_left", sf_dir, __file__)
+    return read_parquet(spark, caches.materialize(out, build))
 
 
 @query(
@@ -1837,26 +1787,18 @@ def _trigger_reagg(df: DataFrame) -> DataFrame:
 def trigger_landing(spark: SparkSession, sf_dir: str) -> str:
     """The landing fixture: orders split into three deterministic arrival
     directories (o_orderkey % 3), published atomically as one layout."""
-    from data_pipeline_aws_spark.caches import publish, staging_dir, versioned_cache_dir
+    from data_pipeline_aws_spark import caches
 
-    out = versioned_cache_dir("trigger_landing", sf_dir, __file__)
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
-        import shutil
-
+    def build(stage: str) -> None:
         o = table(spark, sf_dir, "orders")
-        stage = staging_dir(out)
-        try:
-            for k in range(3):
-                o.where(F.col("o_orderkey") % 3 == k).write.mode(
-                    "overwrite"
-                ).parquet(os.path.join(stage, f"arrival_{k}"))
-            with open(os.path.join(stage, "_SUCCESS"), "w"):
-                pass
-        except BaseException:
-            shutil.rmtree(stage, ignore_errors=True)
-            raise
-        publish(stage, out)
-    return out
+        for k in range(3):
+            o.where(F.col("o_orderkey") % 3 == k).write.mode("overwrite").parquet(
+                os.path.join(stage, f"arrival_{k}")
+            )
+
+    return caches.materialize(
+        caches.versioned_cache_dir("trigger_landing", sf_dir, __file__), build
+    )
 
 
 def _trigger_epochs(state: str) -> list[int]:
@@ -1918,26 +1860,20 @@ def trigger_process(spark: SparkSession, state: str, arrival: str) -> bool:
     content deterministic, so a same-epoch race publishes identical
     data whichever session wins."""
     import json
-    import shutil
 
-    from data_pipeline_aws_spark.caches import publish, staging_dir
+    from data_pipeline_aws_spark import caches
 
     merged, cur, processed = trigger_merged(spark, state, arrival)
     if merged is None:
         return False
     os.makedirs(state, exist_ok=True)
-    final = os.path.join(state, f"rollup_e{cur + 1}")
-    stage = staging_dir(final)
-    try:
+
+    def build(stage: str) -> None:
         merged.write.mode("overwrite").parquet(stage)
         with open(os.path.join(stage, "_PROCESSED.json"), "w") as f:
-            json.dump(
-                processed + [os.path.basename(arrival.rstrip(os.sep))], f
-            )
-    except BaseException:
-        shutil.rmtree(stage, ignore_errors=True)
-        raise
-    publish(stage, final)
+            json.dump(processed + [os.path.basename(arrival.rstrip(os.sep))], f)
+
+    caches.materialize(os.path.join(state, f"rollup_e{cur + 1}"), build)
     return True
 
 

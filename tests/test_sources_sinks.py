@@ -50,12 +50,14 @@ def test_compaction_collapses_file_count(spark, sf_dir):
     import glob
     import os
 
-    from data_pipeline_aws_spark import all_queries
-    from data_pipeline_aws_spark.sources.ingest import _cache_dir
+    from data_pipeline_aws_spark import all_queries, caches
+    from data_pipeline_aws_spark.sources import ingest
 
     all_queries()["q_compact"](spark, sf_dir).collect()
-    frag = glob.glob(os.path.join(_cache_dir("frag_events", sf_dir), "*.parquet"))
-    comp = glob.glob(os.path.join(_cache_dir("compacted_events", sf_dir), "*.parquet"))
+    frag_dir = caches.versioned_cache_dir("frag_events", sf_dir, ingest.__file__)
+    comp_dir = caches.versioned_cache_dir("compacted_events", sf_dir, ingest.__file__)
+    frag = glob.glob(os.path.join(frag_dir, "*.parquet"))
+    comp = glob.glob(os.path.join(comp_dir, "*.parquet"))
     assert len(frag) == 200
     # tiny fixture → well under one 128 MB target file
     assert len(comp) == 1
@@ -70,11 +72,12 @@ def test_zorder_layout_tightens_per_file_bounding_boxes(spark, sf_dir):
     import glob
     import os
 
-    from data_pipeline_aws_spark import all_queries
-    from data_pipeline_aws_spark.sources.ingest import _cache_dir
+    from data_pipeline_aws_spark import all_queries, caches
+    from data_pipeline_aws_spark.sources import ingest
 
     all_queries()["q_zorder"](spark, sf_dir).collect()
-    files = glob.glob(os.path.join(_cache_dir("zorder_lineitem", sf_dir), "*.parquet"))
+    out = caches.versioned_cache_dir("zorder_lineitem", sf_dir, ingest.__file__)
+    files = glob.glob(os.path.join(out, "*.parquet"))
     assert len(files) > 4, files
 
     li = table(spark, sf_dir, "lineitem")
@@ -155,13 +158,14 @@ def test_range_sort_sink_files_are_disjoint_and_internally_sorted(spark, sf_dir)
 
     import pandas as pd
 
-    from data_pipeline_aws_spark import all_queries
-    from data_pipeline_aws_spark.sources.ingest import _cache_dir
+    from data_pipeline_aws_spark import all_queries, caches
+    from data_pipeline_aws_spark.sources import ingest
 
     row = all_queries()["q_range_sort_sink"](spark, sf_dir).collect()[0]
     assert row.n_files_ok and row.ranges_disjoint
 
-    files = sorted(glob.glob(_cache_dir("range_sorted_orders", sf_dir) + "/*.parquet"))
+    out = caches.versioned_cache_dir("range_sorted_orders", sf_dir, ingest.__file__)
+    files = sorted(glob.glob(out + "/*.parquet"))
     assert 1 <= len(files) <= 8
     spans = []
     total = 0
@@ -215,11 +219,12 @@ def test_gzip_ingest_shards_are_real_gzip_members(spark, sf_dir):
     import gzip
     import os
 
-    from data_pipeline_aws_spark import all_queries
-    from data_pipeline_aws_spark.sources.ingest import _cache_dir
+    from data_pipeline_aws_spark import all_queries, caches
+    from data_pipeline_aws_spark.sources import ingest
 
     all_queries()["q_gzip_ingest"](spark, sf_dir).collect()
-    shards = glob.glob(os.path.join(_cache_dir("gz_documents", sf_dir), "*.gz"))
+    out = caches.versioned_cache_dir("gz_documents", sf_dir, ingest.__file__)
+    shards = glob.glob(os.path.join(out, "*.gz"))
     assert len(shards) > 1, "single monolithic .gz defeats read parallelism"
     with open(shards[0], "rb") as fh:
         assert fh.read(2) == b"\x1f\x8b"
@@ -301,13 +306,16 @@ def test_warcgz_shards_are_per_record_gzip_members(spark, sf_dir):
     import os
     import zlib
 
-    from data_pipeline_aws_spark import all_queries
-    from data_pipeline_aws_spark.sources.ingest import _cache_dir
+    from data_pipeline_aws_spark import all_queries, caches
+    from data_pipeline_aws_spark.sources import ingest
 
     n_rows = all_queries()["q_warcgz_ingest"](spark, sf_dir).count()
     shards = sorted(
         glob.glob(
-            os.path.join(_cache_dir("warcgz_documents", sf_dir), "member-*.warc.gz")
+            os.path.join(
+                caches.versioned_cache_dir("warcgz_documents", sf_dir, ingest.__file__),
+                "member-*.warc.gz",
+            )
         )
     )
     assert len(shards) > 1, "single monolithic shard defeats read parallelism"
