@@ -60,21 +60,6 @@ PGM_W = 16  # fixture raster width for the 2-D resize rung (whole rows kept)
 PGM_MAX_ROWS = 64  # resize reads at most 16x64 = 1 KiB per asset
 
 
-def decode_image(payload: bytes) -> "object":
-    """Real image decode — requires PIL, not present in this environment.
-
-    Production: `from PIL import Image; return Image.open(io.BytesIO(payload))`.
-    """
-    try:
-        from PIL import Image  # noqa: F401
-    except ImportError as exc:  # pragma: no cover - env without PIL
-        raise NotImplementedError(
-            "image decode requires PIL; install pillow (PGM decodes "
-            "natively via decode_pgm)"
-        ) from exc
-    raise NotImplementedError("wire PIL decode here when the codec lands")
-
-
 @query(
     "q_multimodal_meta",
     oracle="""
