@@ -31,7 +31,7 @@ def _dead_pid() -> int:
     return p.pid
 
 
-def _fake_install(tmp_path, conf_files=("spark-defaults.conf.template",)):
+def _fake_install(tmp_path):
     """A JDK (bin/java + release) and a SPARK_HOME (jars/, conf/) to key on."""
     jdk = tmp_path / "jdk"
     (jdk / "bin").mkdir(parents=True)
@@ -41,8 +41,7 @@ def _fake_install(tmp_path, conf_files=("spark-defaults.conf.template",)):
     (home / "jars").mkdir(parents=True)
     (home / "jars" / "spark-core.jar").write_bytes(b"x" * 100)
     (home / "conf").mkdir()
-    for name in conf_files:
-        (home / "conf" / name).write_text("")
+    (home / "conf" / "spark-defaults.conf.template").write_text("")
     return jdk, home
 
 
