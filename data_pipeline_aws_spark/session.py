@@ -35,7 +35,10 @@ its path turns it off for good), when ``SPARK_CONF_DIR`` is set or
 ``$SPARK_HOME/conf`` holds anything but ``*.template`` files (JDK 17 will not
 record with a non-empty directory on the classpath, so CDS launches point
 ``SPARK_CONF_DIR`` at an empty directory), when the process already has a
-gateway JVM, and while another live process records the same key.
+gateway JVM, and while another live process records the same key. A
+recorder holds the key's ``caches.pid_lock``, ``<key>.rec.lock``, from
+planning until its archive is published; every ``<key>.*`` file is a
+recorder's, so the next holder deletes what a killed one left.
 """
 
 from __future__ import annotations
@@ -44,7 +47,6 @@ import atexit
 import contextlib
 import hashlib
 import os
-import re
 import shutil
 import subprocess
 import sys
@@ -97,8 +99,6 @@ ARCHIVE = "classes.jsa"  # the archive file inside <key>/; _SUCCESS holds its by
 # Bound on the recording JVM's exit. Writing the archive takes about 15 s on
 # a 4-core host; a normal exit takes half a second.
 EXIT_WAIT_S = 60.0
-# Recordings ({key}.rec-{pid}.jsa) and materialize stagings ({key}.build{pid}-{tid}).
-_PID_FILE = re.compile(r"\.(?:rec-|build)(\d+)")
 
 
 def ship_package(spark: SparkSession) -> None:
@@ -156,6 +156,26 @@ def _intact(final: str) -> bool:
         return False
 
 
+def _claim(root: str, key: str) -> contextlib.ExitStack | None:
+    """Take ``key``'s recording lock without waiting and delete what dead
+    recorders of ``key`` left; None while a live process records it."""
+    claim = contextlib.ExitStack()
+    lock = os.path.join(root, f"{key}.rec.lock")
+    if not claim.enter_context(caches.pid_lock(lock, until=lambda: True)):
+        claim.close()
+        return None
+    for name in os.listdir(root):
+        path = os.path.join(root, name)
+        if not name.startswith(f"{key}.") or path.startswith(lock):
+            continue
+        if os.path.isdir(path):
+            shutil.rmtree(path, ignore_errors=True)
+        else:
+            with contextlib.suppress(FileNotFoundError):
+                os.unlink(path)
+    return claim
+
+
 class ClassArchive:
     """The driver JVM's class-data-sharing archive for one launch.
 
@@ -163,15 +183,18 @@ class ClassArchive:
     at exit and publish it) or ``off``; ``flags`` are the JVM options that do
     it. `plan` decides; `launch` starts the JVM with them."""
 
-    def __init__(self, mode: str = "off", flags: str = "", root: str = "", key: str = "") -> None:
+    def __init__(
+        self, mode: str = "off", flags: str = "", root: str = "", key: str = "", claim: contextlib.ExitStack | None = None
+    ) -> None:
         self.mode, self.flags, self.root, self.key = mode, flags, root, key
+        self.claim = claim or contextlib.ExitStack()  # holds the recording lock
         self.final = os.path.join(root, key)
         self.recording = f"{self.final}.rec-{os.getpid()}.jsa"
 
     @classmethod
     def plan(cls, java_opts: str) -> ClassArchive:
-        """Decide for a driver JVM about to start with ``java_opts``; reap the
-        recordings and stagings of dead processes on the way."""
+        """Decide for a driver JVM about to start with ``java_opts``; delete the
+        files of dead recorders on the way."""
         if os.environ.get("SPARK_CONF_DIR") or "PYSPARK_GATEWAY_PORT" in os.environ:
             return cls()  # a user's configuration, or a JVM this process does not start
         spark_home = _find_spark_home()
@@ -196,24 +219,14 @@ class ClassArchive:
             if _intact(final):
                 return cls("hit", f"-XX:SharedArchiveFile={os.path.join(final, ARCHIVE)}", root, key)
             shutil.rmtree(final, ignore_errors=True)  # damaged: record it again
-        recorder = False
-        for name in names:
-            m = _PID_FILE.search(name)
-            if m is None:
-                continue
-            if caches._claim_holder_alive(int(m.group(1))):
-                recorder |= name.startswith(f"{key}.rec-")
-            else:
-                path = os.path.join(root, name)
-                if os.path.isdir(path):
-                    shutil.rmtree(path, ignore_errors=True)
-                else:
-                    with contextlib.suppress(FileNotFoundError):
-                        os.unlink(path)
-        if recorder:
+        for other in {n.split(".")[0] for n in names if "." in n} - {key, ""}:
+            if (stale := _claim(root, other)) is not None:
+                stale.close()
+        claim = _claim(root, key)
+        if claim is None:
             return cls()  # one recording per key at a time
-        archive = cls("record", "", root, key)
-        open(archive.recording, "w").close()  # the claim other processes see
+        archive = cls("record", "", root, key, claim)
+        open(archive.recording, "w").close()
         archive.flags = f"-XX:ArchiveClassesAtExit={archive.recording} -Xlog:cds=off"
         return archive
 
@@ -264,6 +277,7 @@ class ClassArchive:
         finally:
             with contextlib.suppress(FileNotFoundError):
                 os.unlink(self.recording)
+            self.claim.close()
 
     def _adopt(self, stage: str) -> None:
         size = os.path.getsize(self.recording)

@@ -798,98 +798,16 @@ def _vacuum_cache_dir(sf_dir: str) -> str:
     return versioned_cache_dir("vacuum_fixture", sf_dir, __file__)
 
 
-def _pid_alive(pid: int) -> bool:
-    """True iff ``pid`` is a live process (signal-0 probe; EPERM counts
-    as alive — some other user's live process must never be 'reaped')."""
-    try:
-        os.kill(pid, 0)
-    except ProcessLookupError:
-        return False
-    except OSError:
-        return True
-    return True
-
-
 @contextmanager
 def _vacuum_lock(layout: str):
     """Serialize plant+walk+delete across sessions sharing the cached
-    vacuum fixture (round-10 ADVICE): two concurrent q_vacuum_orphans
-    calls racing the same layout could hit FileNotFoundError mid-walk or
-    double-count each other's plants. O_EXCL spin lock, caches.py style.
+    vacuum fixture: two concurrent q_vacuum_orphans calls racing the same
+    layout could hit FileNotFoundError mid-walk or double-count each
+    other's plants. The lock is a `caches.pid_lock`."""
+    from data_pipeline_aws_spark.caches import pid_lock
 
-    Takeover rules (round-11 ADVICE — the old 120 s mtime rule stole
-    locks from live-but-slow holders, and its unlink+recreate let two
-    waiters each unlink the other's fresh lock):
-    - the holder records its PID in the lock; a LIVE holder is never
-      stolen no matter how long it runs (liveness replaces mtime refresh);
-    - takeover of a dead holder is single-winner ATOMIC: os.rename the
-      corpse to a private name — exactly one waiter's rename succeeds,
-      losers see ENOENT and re-race the O_EXCL acquire;
-    - release unlinks the lock only if it is still OUR inode, so a
-      (pathological) mis-steal can never cascade into deleting a
-      successor holder's lock."""
-    lock = f"{layout.rstrip(os.sep)}.vacuum.lock"
-    deadline = time.monotonic() + 300.0
-    while True:
-        try:
-            fd = os.open(lock, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-            os.write(fd, str(os.getpid()).encode())
-            break
-        except OSError:
-            try:
-                with open(lock, "rb") as f:
-                    holder = int(f.read().strip() or b"0")
-            except (OSError, ValueError):
-                continue  # released; re-race immediately
-            if holder <= 0:
-                # Mid-write window: the holder created the lock with
-                # O_EXCL but has not landed its PID bytes yet (round-12
-                # ADVICE — parsing the empty file as holder=0 and reaping
-                # would steal a LIVE holder's lock). Never reap a lock
-                # whose holder is unknown; wait for the write.
-                if time.monotonic() > deadline:
-                    raise TimeoutError(f"vacuum lock held too long: {lock}")
-                time.sleep(0.01)
-                continue
-            if _pid_alive(holder):
-                if time.monotonic() > deadline:
-                    raise TimeoutError(f"vacuum lock held too long: {lock}")
-                time.sleep(0.1)
-                continue
-            reap = f"{lock}.reap{os.getpid()}"
-            try:
-                os.rename(lock, reap)  # atomic: one winner per corpse
-            except OSError:
-                continue  # another waiter reaped it first
-            try:
-                with open(reap, "rb") as f:
-                    got = int(f.read().strip() or b"0")
-            except (OSError, ValueError):
-                got = holder
-            if got != holder and (got <= 0 or _pid_alive(got)):
-                # ABA: a fresh lock slid in between the read and the
-                # rename — live holder, OR mid-write (got<=0: its PID
-                # bytes not yet landed, which still means a live creator;
-                # round-12 ADVICE). Restore it (link fails if a third
-                # waiter already acquired, in which case that newer lock
-                # stands) and re-race.
-                try:
-                    os.link(reap, lock)
-                except OSError:
-                    pass
-            try:
-                os.unlink(reap)
-            except OSError:
-                pass
-    try:
+    with pid_lock(f"{layout.rstrip(os.sep)}.vacuum.lock"):
         yield
-    finally:
-        try:
-            if os.stat(lock).st_ino == os.fstat(fd).st_ino:
-                os.unlink(lock)  # only ever our own lock
-        except OSError:
-            pass
-        os.close(fd)
 
 
 def vacuum_fixture(spark: SparkSession, sf_dir: str) -> str:

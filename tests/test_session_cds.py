@@ -15,6 +15,7 @@ import shutil
 import signal
 import subprocess
 import sys
+import threading
 import time
 
 import pytest
@@ -110,7 +111,7 @@ def test_dead_leftovers_are_reaped_and_one_recorder_per_key(fake_env):
     first = ClassArchive.plan("-Xmx16g")
     try:
         assert first.mode == "record" and first.key == key
-        assert sorted(os.listdir(root)) == sorted(["conf", os.path.basename(first.recording)])
+        assert sorted(os.listdir(root)) == sorted(["conf", os.path.basename(first.recording), f"{key}.rec.lock"])
         # a live process records this key: the next launch neither records
         # nor touches that recording
         second = ClassArchive.plan("-Xmx16g")
@@ -118,6 +119,40 @@ def test_dead_leftovers_are_reaped_and_one_recorder_per_key(fake_env):
         assert os.path.exists(first.recording)
     finally:
         os.unlink(first.recording)
+        first.claim.close()
+
+
+def test_two_planners_at_once_give_one_recorder(fake_env, monkeypatch):
+    """Two threads list the cache directory at the same moment; the
+    recording lock still lets exactly one of them record."""
+    root = fake_env[2]
+    os.makedirs(root)
+    both_listed = threading.Barrier(2, timeout=30)
+    waited = set()
+    real_listdir = os.listdir
+
+    def listdir(path="."):
+        names = real_listdir(path)
+        if path == root and threading.get_ident() not in waited:
+            waited.add(threading.get_ident())
+            both_listed.wait()
+        return names
+
+    monkeypatch.setattr(os, "listdir", listdir)
+    plans = []
+    threads = [threading.Thread(target=lambda: plans.append(ClassArchive.plan("-Xmx16g"))) for _ in range(2)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=60)
+    try:
+        assert len(plans) == 2
+        assert sorted(a.mode for a in plans) == ["off", "record"]
+    finally:
+        for a in plans:
+            if a.mode == "record":
+                os.unlink(a.recording)
+                a.claim.close()
 
 
 # ---- fault injection with real JVMs ----------------------------------------
